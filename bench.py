@@ -16,9 +16,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from sarfile_analyzer_ng_spark.functions.dedup import release
 from sarfile_analyzer_ng_spark.queries import REGISTRY, memo_builders
 from sarfile_analyzer_ng_spark.session import get_spark
+from sarfile_analyzer_ng_spark.util import release
 
 # The 2x-gate comparison subset: PINNED to the exact keys BENCH_r01
 # measured — the previous exclusion-based form silently absorbed
@@ -137,6 +137,17 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    # the full per-query map this run rewrites at the end; its prior
+    # contents are the reference for top_deltas_vs_prev
+    full_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "docs",
+        f"bench_full_sf{sf}.json",
+    )
+    try:
+        with open(full_path) as fh:
+            prior = json.load(fh).get("queries", {})
+    except (OSError, ValueError):
+        prior = {}
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -191,12 +202,12 @@ def main() -> None:
             timings[key] = min(timings.get(key, elapsed), elapsed)
             exec_timings[key] = min(exec_timings.get(key, ex), ex)
             # operators that cache reused sub-frames (minhash/simhash/
-            # jaccard/percentiles/ivf) declare them as _cached_inputs;
+            # jaccard/percentiles/ivf) register them with util.own_cache;
             # release keeps per-query memory independent while leaving
             # the deliberately session-lived cross-query memos (the
             # q31/q51 shared pair frame) warm — a long-lived session
             # would hold them too
-            release(df)
+            release(spark)
         # reps stay independent of the memoized frames' build cost
         # only within a rep; drop everything between reps (but leave
         # the final rep's memos warm for the subset reps below)
@@ -228,7 +239,7 @@ def main() -> None:
             elapsed = round(time.perf_counter() - start, 3)
             print(f"[bench] r1rep{rep} {key} {elapsed}s", file=sys.stderr)
             warm[key] = min(warm.get(key, elapsed), elapsed)
-            release(df)
+            release(spark)
 
     total = round(sum(timings.values()), 3)
     memo_seconds = round(
@@ -240,27 +251,15 @@ def main() -> None:
     # exclusion-based form silently absorbed every query added after
     # round 1 (q59+), inflating the "comparable" number each round.
     r1_keys = [k for k in R1_KEYS if k in timings]
-    # Top wall-time movers vs the most recent recorded full artifact
-    # (docs/bench_r*.json at the same sf), so a regression is visible
-    # in the headline even if the per-query map gets clipped.
-    deltas: dict[str, float] = {}
-    prior_files = sorted(
-        f for f in os.listdir(os.path.join(os.path.dirname(__file__), "docs"))
-        if re.fullmatch(rf"bench_r\d+[a-z]?_sf{re.escape(str(sf))}\.json", f)
+    # Top wall-time movers vs the committed full artifact at the same
+    # sf as it was before this run, so a regression is visible in the
+    # headline even if the per-query map gets clipped.
+    moved = sorted(
+        ((k, round(v - prior[k], 3)) for k, v in timings.items()
+         if k in prior),
+        key=lambda kv: -abs(kv[1]),
     )
-    if prior_files:
-        try:
-            with open(os.path.join(os.path.dirname(__file__), "docs",
-                                   prior_files[-1])) as fh:
-                prior = json.load(fh).get("queries", {})
-            moved = sorted(
-                ((k, round(v - prior[k], 3)) for k, v in timings.items()
-                 if k in prior),
-                key=lambda kv: -abs(kv[1]),
-            )
-            deltas = dict(moved[:5])
-        except (OSError, ValueError, KeyError):
-            pass
+    deltas = dict(moved[:5])
     r10_keys = [k for k in R10_KEYS if k in timings]
     headline = {
         "metric": "total_query_wall_seconds",
@@ -296,10 +295,6 @@ def main() -> None:
     # docs file, and the ONE stdout JSON line (the driver contract)
     # stays small enough to survive the tail window intact —
     # headline totals + the slowest 25 queries, explicitly labeled.
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "docs",
-        f"bench_full_sf{sf}.json",
-    )
     with open(full_path, "w") as fh:
         json.dump({**headline, "queries": timings,
                    "exec_queries": exec_timings}, fh, indent=1,

@@ -183,7 +183,8 @@ def main(argv: list[str] | None = None) -> None:
     if args.command == "leakage":
         # cross-split exact-dup contamination at the 80/10/10 hash
         # seam (q175 pointed at a live corpus)
-        from .functions.dedup import release, split_leakage
+        from .functions.dedup import split_leakage
+        from .util import release
 
         docs = spark.read.parquet(args.path)
         for col in ("doc_id", "text"):
@@ -192,7 +193,7 @@ def main(argv: list[str] | None = None) -> None:
         out = split_leakage(docs, "text", "doc_id",
                             {"train": 80, "val": 10, "test": 10})
         show(out)
-        release(out)
+        release(spark)
         return
 
     if args.command == "card":

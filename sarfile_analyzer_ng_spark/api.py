@@ -216,13 +216,16 @@ def analyze_section(df: DataFrame, file: str, section: str,
             c for c in wide.columns
             if c not in ("file", "host", "device", "ts")
         ]
+        # backtick-quoted: sadf metric names carry dots
+        # (io-reads.bread), which a bare name parses as struct access
+        quoted = [f"`{c}`" for c in metric_cols]
         # The reference keeps the first duplicate in FRAME order
         # (df.index.duplicated(keep='first')) — a distributed frame
         # has no row order, so the deterministic analog orders ties by
         # the metric values themselves (same surviving row every run,
         # on every engine).
         deduped = dedup_keep_first(
-            wide.select("ts", *metric_cols), ["ts"], metric_cols
+            wide.select("ts", *quoted), ["ts"], quoted
         )
         table = TS.insert_restarts(deduped, rst, "ts", metric_cols)
         out.append(

@@ -7,11 +7,13 @@ Everything here stays JVM-side (xxhash64 / md5 / explode+aggregate
 shapes) — no Python UDFs anywhere in the dedup path, so the whole
 module runs under whole-stage codegen.
 
-Operators that cache an internal frame for a self-join attach it to
-the returned DataFrame as ``_cached_inputs``; call :func:`release`
-after the consuming action to unpersist (``bench.py`` and long-lived
-sessions should do this — otherwise executor storage accumulates
-across repeated calls).
+Operators that cache an internal frame for a self-join register it
+with :func:`util.own_cache`; the caller frees every such frame of the
+session with one :func:`util.release` after the consuming action
+(``bench.py`` and long-lived sessions should do this — otherwise
+executor storage accumulates across repeated calls). Frames passed in
+by the caller (``shingles=``, ``candidates=``, ``sigs=``) stay the
+caller's.
 """
 
 from __future__ import annotations
@@ -21,15 +23,7 @@ import logging
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import fan_out, memo_cols, rnd
-
-
-def release(df: DataFrame) -> None:
-    """Unpersist the internal cached frames backing ``df`` (attached by
-    operators as ``_cached_inputs``). Call after the consuming action;
-    no-op for frames without cached inputs."""
-    for dep in getattr(df, "_cached_inputs", ()):  # noqa: B004 — duck attr
-        dep.unpersist()
+from ..util import fan_out, memo_cols, own_cache, rnd
 
 
 # shared with the text/feature ops — see util.fan_out
@@ -212,7 +206,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     # Signatures are tiny (64 longs/doc) next to the corpus; cache them
     # so the self-join below doesn't re-run the shingle+hash pipeline
     # once per side.
-    banded = banded.cache()
+    banded = own_cache(banded.cache())
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
         a.join(b, on="band")
@@ -232,7 +226,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    pairs._cached_inputs = [banded]  # see release()
     return pairs
 
 
@@ -356,7 +349,7 @@ def minhash_lsh_pairs_portable(df: DataFrame, text_col: str, id_col: str,
     )
     if max_df is not None:
         banded = _drop_hot_bands(banded, max_df)
-    banded = banded.cache()
+    banded = own_cache(banded.cache())
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
         a.join(b, on="band")
@@ -369,7 +362,6 @@ def minhash_lsh_pairs_portable(df: DataFrame, text_col: str, id_col: str,
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    pairs._cached_inputs = [banded]  # see release()
     return pairs
 
 
@@ -538,15 +530,13 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
 
     Pass ``shingles`` (a cached :func:`shingle_hash_rows` frame) to
     share one shingle build across variants; the caller then owns its
-    lifetime (it is left out of ``_cached_inputs``).
+    lifetime.
     """
-    owns_cache = shingles is None
-    cached = (
-        shingle_hash_rows(df, text_col, id_col, shingle_n).cache()
-        if owns_cache
+    sh = (
+        own_cache(shingle_hash_rows(df, text_col, id_col, shingle_n).cache())
+        if shingles is None
         else shingles
     )  # reused three times (two join sides + sizes)
-    sh = cached
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     if max_df is not None:
         # Scale lever: a shingle appearing in f documents generates
@@ -588,10 +578,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "inter", "jaccard")
     )
-    # the CACHED frame, not `sh` — with max_df set, `sh` is rebound to
-    # the anti-joined (uncached) derivative and release() would leak
-    # the real cache entry
-    jac._cached_inputs = [cached] if owns_cache else []  # see release()
     return jac
 
 
@@ -662,25 +648,25 @@ def lsh_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     # ``shingles`` frame (:func:`shingle_hash_rows`, distinct) is
     # equivalent on both paths — min and collect_set are dup-invariant
     # — and shares the one explode across the whole dedup family.
-    owns_cache = shingles is None
     sh = (
-        shingle_rows(df, text_col, id_col, shingle_n, distinct=False)
-        .select("doc", F.xxhash64("shingle").alias("shingle"))
-        .cache()
-        if owns_cache
+        own_cache(
+            shingle_rows(df, text_col, id_col, shingle_n, distinct=False)
+            .select("doc", F.xxhash64("shingle").alias("shingle"))
+            .cache()
+        )
+        if shingles is None
         else shingles
     )
     # A caller holding the banding output already (a session memo
     # shared with the minhash demo/gate queries) passes it as
     # ``candidates`` — the prefilter stage then costs nothing here.
-    owns_raw = candidates is None
     raw = (
         minhash_lsh_pairs(df, text_col, id_col, shingle_n, num_hashes,
                           bands, shingles=sh, max_df=max_df)
-        if owns_raw
+        if candidates is None
         else candidates
     )
-    cand = raw.select("doc_a", "doc_b").cache()
+    cand = own_cache(raw.select("doc_a", "doc_b").cache())
     # Per-doc shingle sets, restricted to docs that survived LSH; the
     # arrays ride the pair join instead of re-exploding per shingle.
     in_cand = cand.select(F.col("doc_a").alias("doc")).unionByName(
@@ -710,11 +696,6 @@ def lsh_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "inter", "jaccard")
     )
-    out._cached_inputs = [  # see release()
-        cand,
-        *([sh] if owns_cache else []),
-        *(getattr(raw, "_cached_inputs", ()) if owns_raw else ()),
-    ]
     return out
 
 
@@ -833,7 +814,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
         chunks = chunks.join(F.broadcast(hot), ["band", "key"], "left_anti")
     # tiny (doc, 64-bit sig, band keys) frame; cache it so the
     # self-join below doesn't run the explode+64-agg pipeline per side
-    chunks = chunks.cache()
+    chunks = own_cache(chunks.cache())
     a, b = chunks.alias("a"), chunks.alias("b")
     out = (
         a.join(b, on=["band", "key"])
@@ -847,7 +828,6 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    out._cached_inputs = [chunks]  # see release()
     return out
 
 
@@ -1568,13 +1548,9 @@ def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     so equality with the brute-force oracle holds there by margin."""
     from ..util import rnd
 
-    # Keep a handle on the PAIRS frame before projecting: .select()
-    # returns a fresh DataFrame without the duck-typed _cached_inputs,
-    # so reading the attribute off `cands` would always see [] and
-    # release() would leak the banded-signature cache every call.
-    pairs = minhash_lsh_pairs(df, text_col, id_col, shingle_n=shingle_n,
-                              num_hashes=num_hashes, bands=bands)
-    cands = pairs.select("doc_a", "doc_b")
+    cands = minhash_lsh_pairs(df, text_col, id_col, shingle_n=shingle_n,
+                              num_hashes=num_hashes, bands=bands
+                              ).select("doc_a", "doc_b")
     ta = df.select(F.col(id_col).alias("doc_a"), F.col(text_col).alias("_ta"))
     tb = df.select(F.col(id_col).alias("doc_b"), F.col(text_col).alias("_tb"))
     la, lb = F.length("_ta"), F.length("_tb")
@@ -1610,7 +1586,6 @@ def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
         .select("doc_a", "doc_b", sim.alias("edit_sim"))
         .where(F.col("edit_sim") >= tau)
     )
-    out._cached_inputs = getattr(pairs, "_cached_inputs", [])
     return out
 
 
@@ -1838,14 +1813,14 @@ def split_leakage(df: DataFrame, text_col: str, id_col: str,
     the LATER side whose exact content also appears on the earlier
     side (the eval rows you must drop). Shape at scale: one
     content-hash groupBy (uniform 128-bit key — skew-free) + one
-    scalar agg per pair over the persisted group frame (released via
-    the ``_cached_inputs`` contract).
+    scalar agg per pair over the persisted group frame (freed by
+    :func:`util.release`).
     """
     from .text import hash_split
 
     splits = list(weights)
     sp = hash_split(df.select(id_col, text_col), id_col, dict(weights))
-    g = (
+    g = own_cache(
         sp.groupBy(
             F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("fp")
         )
@@ -1873,7 +1848,6 @@ def split_leakage(df: DataFrame, text_col: str, id_col: str,
         for j in range(i + 1, len(splits)):
             p = pair(splits[i], splits[j])
             out = p if out is None else out.unionAll(p)
-    out._cached_inputs = [g]
     return out
 
 
@@ -1971,7 +1945,7 @@ def passage_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     )
     if max_df is not None:
         banded = _drop_hot_bands(banded, max_df)
-    banded = banded.cache()
+    banded = own_cache(banded.cache())
     a, b = banded.alias("a"), banded.alias("b")
     lt = (F.col("a.doc") < F.col("b.doc")) | (
         (F.col("a.doc") == F.col("b.doc")) & (F.col("a.idx") < F.col("b.idx"))
@@ -1990,7 +1964,6 @@ def passage_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
         .dropDuplicates(["doc_a", "idx_a", "doc_b", "idx_b"])
         .where(F.col("est_jaccard") >= threshold)
     )
-    pairs._cached_inputs = [banded]  # see release()
     return pairs
 
 

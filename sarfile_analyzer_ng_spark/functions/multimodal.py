@@ -22,7 +22,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,22 +48,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def read_media_dir(spark: SparkSession, path: str, kind: str) -> DataFrame:
-    """Ingest a directory of media files as MEDIA_SCHEMA rows — the
-    ``binaryFile`` source streams payloads without driver involvement."""
-    raw = spark.read.format("binaryFile").load(path)
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.lit(None).cast("string").alias("mime"),
-        F.col("content").alias("payload"),
-        F.create_map(
-            F.lit("path"), F.col("path"),
-            F.lit("length"), F.col("length").cast("string"),
-        ).alias("meta"),
-    )
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import own_cache
 from .dedup import decontaminate_winnow
 from .text import (
     budget_select,
@@ -66,20 +67,20 @@ def curate_funnel(train: DataFrame, eval_df: DataFrame, text_col: str,
     expensive stage — measured 3× the whole funnel when re-executed
     per reference). Winnowing re-joins the raw text for dedup
     SURVIVORS only, so the fingerprint stage scans the already-thinned
-    corpus. Call ``dedup.release`` on the result after the consuming
-    action to unpersist the verdict cache.
+    corpus. Call ``util.release`` after the consuming action to
+    unpersist the verdict and spine caches.
     """
     qf = quality_filter(train, text_col, id_col, **quality_kwargs).select(
         id_col, "n_words", "keep"
     )
-    qf = qf.cache()
+    qf = own_cache(qf.cache())
     # the NARROW spine is cached too: it feeds three plan branches
     # (final attribution, the dedup window, the decon survivor join),
     # and without the cache each branch re-runs the full-corpus
     # md5(text) scan + quality join
-    base = train.select(
+    base = own_cache(train.select(
         id_col, source_col, F.md5(F.col(text_col)).alias("_h")
-    ).join(qf, id_col).cache()
+    ).join(qf, id_col).cache())
     w = Window.partitionBy("_h").orderBy(F.col(id_col))
     qpass = base.where(F.col("keep") == 1).withColumn(
         "_rn", F.row_number().over(w)
@@ -104,7 +105,6 @@ def curate_funnel(train: DataFrame, eval_df: DataFrame, text_col: str,
             .alias("stage"),
         )
     )
-    out._cached_inputs = [qf, base]  # see functions.dedup.release
     return out
 
 
@@ -148,10 +148,10 @@ def assemble_training_data(docs: DataFrame, text_col: str, id_col: str,
     # chain — the quality regex pipeline alone ran 6+ times per
     # execution (r12, guide §1.2). The branch-point frames are
     # persisted NARROW (text dropped — the spine design): kilobytes
-    # per million docs, released via _cached_inputs.
-    qs = quality_score(
+    # per million docs, freed by util.release.
+    qs = own_cache(quality_score(
         docs.select(id_col, source_col, text_col), text_col
-    ).drop(text_col).persist()
+    ).drop(text_col).persist())
     corpus = qs.select(id_col, source_col,
                        F.col("n_words").cast("long").alias("_nt"))
     # Optional mixture-weighting stage (r9): a model-sized
@@ -174,24 +174,24 @@ def assemble_training_data(docs: DataFrame, text_col: str, id_col: str,
                         * F.col("_w")).cast("long"),
             ).alias("_k"),
         )
-    sampled = weighted_sample(qs, id_col, source_col, "quality",
-                              k=k_per_source,
-                              k_overrides=k_overrides).persist()
+    sampled = own_cache(weighted_sample(qs, id_col, source_col, "quality",
+                                        k=k_per_source,
+                                        k_overrides=k_overrides).persist())
     samp_docs = docs.select(id_col, source_col, text_col).join(
         sampled.select(id_col), id_col
     )
     trim = budget_select(samp_docs, text_col, id_col, source_col,
                          budget_tokens)
-    kept = trim.where(F.col("kept") == 1).select(
+    kept = own_cache(trim.where(F.col("kept") == 1).select(
         id_col, source_col, F.col("n_tokens").cast("long").alias("_nt")
-    ).persist()
+    ).persist())
     kept_docs = docs.select(id_col, text_col).join(
         kept.select(id_col), id_col
     )
-    chunks = chunk_documents(kept_docs, text_col, id_col,
-                             chunk_tokens=chunk_tokens, overlap=overlap
-                             ).select(id_col, "chunk_id",
-                                      "n_chunk_tokens").persist()
+    chunks = own_cache(chunk_documents(
+        kept_docs, text_col, id_col, chunk_tokens=chunk_tokens,
+        overlap=overlap,
+    ).select(id_col, "chunk_id", "n_chunk_tokens").persist())
     packed = pack_sequences(chunks, [id_col, "chunk_id"],
                             "n_chunk_tokens", capacity=capacity,
                             num_shards=num_shards)
@@ -225,7 +225,6 @@ def assemble_training_data(docs: DataFrame, text_col: str, id_col: str,
         F.count(F.lit(1)).alias("n_units"), F.sum("_nt").alias("n_tokens")))
     out = s0.unionByName(s1).unionByName(s2).unionByName(s3) \
              .unionByName(s4).unionByName(s5)
-    out._cached_inputs = [qs, sampled, kept, chunks]  # see dedup.release
     return out
 
 

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import fan_out, rnd
+from ..util import fan_out, own_cache, rnd
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -493,7 +493,7 @@ def mmr_rerank(pool: DataFrame, vecs: DataFrame, k: int = 3,
     # recompiling/re-running the matrix subtree per unrolled step
     from pyspark import StorageLevel
 
-    sims = sims.persist(StorageLevel.MEMORY_AND_DISK)
+    sims = own_cache(sims.persist(StorageLevel.MEMORY_AND_DISK))
     lam_c, one_m = F.lit(float(lam)), F.lit(1.0 - lam)
     selected = None
     out_parts = []
@@ -556,9 +556,7 @@ def mmr_rerank(pool: DataFrame, vecs: DataFrame, k: int = 3,
     out = out_parts[0]
     for part in out_parts[1:]:
         out = out.unionByName(part)
-    res = out.select("query_id", "step", "doc_id", "mmr")
-    res._cached_inputs = [sims]  # see functions.dedup.release
-    return res
+    return out.select("query_id", "step", "doc_id", "mmr")
 
 
 def ndcg_discounts(k: int) -> list[float]:

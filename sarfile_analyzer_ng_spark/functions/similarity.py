@@ -17,7 +17,7 @@ import threading
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import rnd, rnd_np, rnd_threshold
+from ..util import own_cache, rnd, rnd_np, rnd_threshold
 
 # serializes pca_power_topd's session-wide codegen-conf toggle: two
 # concurrent trainers interleaving get/set could "restore" each
@@ -403,8 +403,7 @@ def ivf_train(emb: DataFrame, id_col: str, vec_col: str, k_lists: int = 16,
     against the FINAL centroids and that frame is persisted and
     returned as ``(centroids, assigned)`` — :func:`ann_topk_ivf`
     accepts it so training + search share one list assignment instead
-    of each paying a corpus pass (the caller unpersists, or lets
-    ``clearCache`` between bench queries handle it).
+    of each paying a corpus pass (freed by ``util.release``).
     """
     import numpy as np
     import pandas as pd
@@ -459,8 +458,7 @@ def ivf_train(emb: DataFrame, id_col: str, vec_col: str, k_lists: int = 16,
         hit = counts > 0  # empty lists keep their previous centroid
         centroids[hit] = sums[hit] / counts[hit, None]
     if return_assignment:
-        assigned = _ivf_assign(src, centroids).persist()
-        return centroids, assigned
+        return centroids, own_cache(_ivf_assign(src, centroids).persist())
     return centroids
 
 
@@ -1962,7 +1960,7 @@ def ann_topk_pq_arrow_sharded(emb: DataFrame, queries: DataFrame,
     # groupBy packing shuffle (S shards = 1 shuffle, not S)
     wide = pq_codes_wide(codes, id_col, m)
     if len(openers) > 1:
-        wide = wide.persist()
+        wide = own_cache(wide.persist())
         wide.count()
     out = None
     for i, lo in enumerate(openers):
@@ -1976,9 +1974,6 @@ def ann_topk_pq_arrow_sharded(emb: DataFrame, queries: DataFrame,
             n_queries_hint=q_per_shard, n_codebooks_hint=n_cb,
         )
         out = res if out is None else out.unionByName(res)
-    if len(openers) > 1:
-        # expose the persisted packed frame for functions.dedup.release
-        out._cached_inputs = [wide]
     return out
 
 
@@ -2572,7 +2567,7 @@ def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
         .select("doc", "t", "df_",
                 rnd(F.col("w") / F.col("nrm"), 8).alias("u"))
     )
-    u = u.persist()
+    u = own_cache(u.persist())
     mw = u.groupBy("t").agg(F.max("u").alias("mw"))
     wd = Window.partitionBy("doc").orderBy(
         F.col("df_").asc(), F.col("t").asc())
@@ -2583,7 +2578,7 @@ def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
             wd.rowsBetween(Window.unboundedPreceding, 0)), 8))
     )
     full = scored.groupBy("doc").agg(F.max("cum").alias("full"))
-    post = (
+    post = own_cache(
         scored.join(full, "doc")
         .withColumn(
             "indexed",
@@ -2620,5 +2615,4 @@ def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
         )
         .where(F.col("cosine") >= float(tau))
     )
-    out._cached_inputs = [u, post]  # see dedup.release()
     return out

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..util import fan_out, memo_cols, rnd, shard_hash
+from ..util import fan_out, memo_cols, own_cache, rnd, shard_hash
 
 # Stopword alternations per language; the heuristic scores a document
 # by word-boundary stopword hits and takes the argmax with a fixed
@@ -958,16 +958,16 @@ def dsir_weights(raw: DataFrame, target: DataFrame | None, text_col: str,
         g = hashed_ngram_buckets(raw, text_col, id_col, n_buckets,
                                  flag=target_pred)
         # _t is constant per doc, so (doc, b, _t) groups ≡ (doc, b)
-        db = g.groupBy("doc", "b", "_t").agg(
-            F.count(F.lit(1)).alias("c")).cache()
+        db = own_cache(g.groupBy("doc", "b", "_t").agg(
+            F.count(F.lit(1)).alias("c")).cache())
         rc = db.groupBy("b").agg(F.sum("c").alias("cr"))
         tc = db.where(F.col("_t")).groupBy("b").agg(
             F.sum("c").alias("ct"))
     else:
         g_r = hashed_ngram_buckets(raw, text_col, id_col, n_buckets)
         g_t = hashed_ngram_buckets(target, text_col, id_col, n_buckets)
-        db = g_r.groupBy("doc", "b").agg(
-            F.count(F.lit(1)).alias("c")).cache()
+        db = own_cache(g_r.groupBy("doc", "b").agg(
+            F.count(F.lit(1)).alias("c")).cache())
         rc = db.groupBy("b").agg(F.sum("c").alias("cr"))
         tc = g_t.groupBy("b").agg(F.count(F.lit(1)).alias("ct"))
     tot_r = rc.agg(F.sum("cr").cast("double").alias("tr"))
@@ -1004,7 +1004,6 @@ def dsir_weights(raw: DataFrame, target: DataFrame | None, text_col: str,
             F.coalesce("logw", F.lit(0.0)).alias("logw"),
         )
     )
-    out._cached_inputs = [db]  # see functions.dedup.release
     return out
 
 
@@ -1780,8 +1779,8 @@ def doremi_weights(docs: DataFrame, id_col: str, source_col: str,
     )
     # S rows; cached so the trajectory collect and the returned
     # frame's join don't each re-run the two LM scoring pipelines
-    # (the dedup-family _cached_inputs/release() contract)
-    per = per.cache()
+    # (freed by util.release)
+    per = own_cache(per.cache())
     rows = sorted(per.collect(), key=lambda r: r[source_col])
     if not rows:
         raise ValueError("doremi_weights: no sources")
@@ -1808,7 +1807,6 @@ def doremi_weights(docs: DataFrame, id_col: str, source_col: str,
     out = tdf.join(F.broadcast(per), source_col).select(
         F.col(source_col).alias("source"), "step", "weight", "excess_loss"
     )
-    out._cached_inputs = [per]  # dedup.release() contract
     return out
 
 
@@ -2118,7 +2116,7 @@ def chunk_ppl_cut(df: DataFrame, text_col: str, id_col: str,
             .alias("lp"),
         )
     )
-    cppl = (
+    cppl = own_cache(
         scored.groupBy("doc", "idx")
         .agg(rnd(F.avg("lp"), round_to).alias("avg_logp"))
         .select(
@@ -2165,7 +2163,6 @@ def chunk_ppl_cut(df: DataFrame, text_col: str, id_col: str,
             F.col("doc").alias(id_col), "n_chunks", "n_cut", "clean_text"
         )
     )
-    out._cached_inputs = getattr(thr, "_cached_inputs", []) + [cppl]
     return out
 
 
@@ -2603,11 +2600,11 @@ def moore_lewis(df: DataFrame, text_col: str, id_col: str,
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
         ).alias("w"),
     ).join(flags, "doc")
-    cnts = toks.groupBy("w").agg(
+    # feeds 2 vocabs + 2 unk masses + 2 totals; freed by util.release
+    cnts = own_cache(toks.groupBy("w").agg(
         F.sum("ind").cast("double").alias("c_in"),
         F.sum(1 - F.col("ind")).cast("double").alias("c_gen"),
-    ).persist()  # feeds 2 vocabs + 2 unk masses + 2 totals; released
-    # by the caller via dedup.release (_cached_inputs contract)
+    ).persist())
 
     def model(c_col: str):
         tot = cnts.agg(F.sum(c_col).alias("n"))
@@ -2659,7 +2656,6 @@ def moore_lewis(df: DataFrame, text_col: str, id_col: str,
         ce.alias("ce_diff"),
         (ce > 0).cast("int").cast("long").alias("selected"),
     )
-    out._cached_inputs = [cnts]  # see functions.dedup.release
     return out
 
 

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import own_cache
+
 # the mergeable summaries (mg_topk survivors, rank-sample kept rows)
 # finish on a single-task global window by design — fine while the
 # summary is KiB-sized, a silent serialization point if a caller
@@ -397,8 +399,8 @@ def rank_sample_quantiles(df: DataFrame, value_col: str, id_col: str,
         "g", F.col("rn") - F.coalesce(F.lag("rn").over(wk), F.lit(0)))
     wm = Window.orderBy(F.col("v").asc(), F.col("i").asc()).rowsBetween(
         Window.unboundedPreceding, 0)
-    merged = kept.select("v", "i", "g").withColumn(
-        "est_rank", F.sum("g").over(wm).cast("long")).persist()
+    merged = own_cache(kept.select("v", "i", "g").withColumn(
+        "est_rank", F.sum("g").over(wm).cast("long")).persist())
     n_tot = base.count()
     bound = (
         r2.select("s", "step").distinct()
@@ -445,5 +447,4 @@ def rank_sample_quantiles(df: DataFrame, value_col: str, id_col: str,
             ).alias("within_bound"),
         )
     )
-    out._cached_inputs = [merged]
     return out

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..util import rnd
+from ..util import own_cache, rnd
 
 
 def unpivot(df: DataFrame, id_cols: list[str], value_cols: list[str],
@@ -90,9 +90,9 @@ def percentiles(df: DataFrame, value_col: str, by: list[str],
     from it, so the partition ids / in-partition row ids the offset
     join is keyed on are frozen once — correctness no longer rides on
     the optimizer's exchange-reuse firing (an AQE property, not a
-    contract). The cache is registered on the result as
-    ``_cached_inputs`` (see functions.dedup.release); bench and tests
-    clear it between queries. Rank assignment among tied rows is
+    contract). The cache is registered with ``util.own_cache``; the
+    caller frees it with ``util.release(spark)`` after its action (bench
+    and tests do so between queries). Rank assignment among tied rows is
     arbitrary but the rows are identical in (group, value) — shares
     only read the value at ranks lo/hi, so results are deterministic.
     For sketch-grade needs at extreme scale, swap in
@@ -105,7 +105,7 @@ def percentiles(df: DataFrame, value_col: str, by: list[str],
     # and group sizes cover only real values.
     df = df.where(F.col(value_col).isNotNull())
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    vals = (
+    vals = own_cache(
         df.select(*by, value_col)
         .repartitionByRange(n_part, *[F.col(c) for c in by], F.col(value_col))
         .sortWithinPartitions(*by, value_col)
@@ -157,9 +157,7 @@ def percentiles(df: DataFrame, value_col: str, by: list[str],
             rnd(F.sum(share), round_to)
             .alias("p" + f"{p * 100:g}".replace(".", "_"))
         )
-    out = ranked.groupBy(*by).agg(*aggs)
-    out._cached_inputs = [vals]  # unpersist via functions.dedup.release
-    return out
+    return ranked.groupBy(*by).agg(*aggs)
 
 
 def minmax_argmax(df: DataFrame, key_cols: list[str], value_col: str,
@@ -257,14 +255,9 @@ def mad_outliers(df: DataFrame, value_col: str, by: list[str],
             round_to,
         ),
     )
-    out = scored.where(
+    return scored.where(
         (F.col("_mad") > 0) & (F.abs(F.col("robust_z")) > threshold)
     ).drop("_adev")
-    caches = getattr(med, "_cached_inputs", []) + getattr(
-        mad, "_cached_inputs", []
-    )
-    out._cached_inputs = caches
-    return out
 
 
 def moments_merge(old: DataFrame, new: DataFrame, value_col: str,
@@ -403,7 +396,7 @@ def winsorized_stats(df: DataFrame, value_col: str, by: list[str],
         F.greatest(F.col(value_col).cast("double"), F.col(lo_c)),
         F.col(hi_c),
     )
-    out = j.groupBy(*by).agg(
+    return j.groupBy(*by).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.min(lo_c).alias(lo_c),
         F.max(hi_c).alias(hi_c),
@@ -412,5 +405,3 @@ def winsorized_stats(df: DataFrame, value_col: str, by: list[str],
         rnd(F.avg(xw), round_to).alias("win_mean"),
         rnd(F.stddev_pop(xw), round_to).alias("win_std"),
     )
-    out._cached_inputs = getattr(pct, "_cached_inputs", [])
-    return out

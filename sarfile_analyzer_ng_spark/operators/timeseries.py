@@ -82,10 +82,12 @@ def insert_restarts(df: DataFrame, restarts: DataFrame, ts_col: str,
     UNION ALL (no driver-side row building, restart side stays lazy).
 
     ``restarts`` needs only ``ts_col``; all ``zero_cols`` become 0.0 and
-    ``is_restart`` flags the synthetic rows.
+    ``is_restart`` flags the synthetic rows. Names are taken literally
+    (a dot is part of the name, not struct access).
     """
     base = df.select(
-        F.col(ts_col), *[F.col(c) for c in zero_cols], F.lit(False).alias("is_restart")
+        F.col(ts_col), *[F.col(f"`{c}`") for c in zero_cols],
+        F.lit(False).alias("is_restart"),
     )
     zeros = restarts.select(
         F.col(ts_col),

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .util import fan_out, rnd, shard_hash, sql_rnd
+from .util import fan_out, own_cache, rnd, session_memoized, shard_hash, sql_rnd
 from .functions import dedup as D
 from .functions import similarity as S
 from .functions import text as TX
@@ -716,9 +716,9 @@ SELECT doc_id, md5(text) AS md5 FROM (
 # near-dup demo) and q51 (the twin-recall gate) run the IDENTICAL
 # pipeline on the identical planted corpus, so the pairs frame is
 # cached and memoized per (session, sf_dir). Memory is bounded (the
-# candidate-pair frame: two ids + a double per pair) and deliberately
-# NOT listed in _cached_inputs: it is session-lived by design, released
-# only by session teardown / an explicit clearCache.
+# candidate-pair frame: two ids + a double per pair); it is a session
+# memo (util.session_memo), released only by session teardown / an
+# explicit clearCache, never by util.release.
 #
 # r8: the recorded family is the ORACLE-PORTABLE md5+affine variant
 # (dedup.minhash_lsh_pairs_portable) — 32 hashes / 16 bands of 2 rows
@@ -740,33 +740,6 @@ MINHASH_PORT_BANDS = 16
 # sf0.1) and protective beyond it; mirrored verbatim in the q31/q121
 # oracle SQL so value parity holds even when the cap bites.
 MINHASH_MAX_DF = 500
-_MINHASH_PAIR_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
-def _memo_key(spark, sf_dir: str, *extra) -> tuple:
-    """Session-memo key. ``id(spark)`` alone can be REUSED after a
-    SparkSession is garbage-collected (r12 ADVICE): a long process
-    cycling sessions could then be served a frame bound to a dead
-    session. A unique token object stored ON the session cannot
-    collide — a new session always gets a fresh token, and the old
-    token stays alive (as a dict key) without ever comparing equal
-    to it."""
-    tok = getattr(spark, "_graft_memo_token", None)
-    if tok is None:
-        tok = object()
-        spark._graft_memo_token = tok
-    return (tok, sf_dir, *extra)
-
-
-def _ensure_cached(df: DataFrame) -> DataFrame:
-    """Re-arm a session-memoized frame whose cache was dropped by an
-    external ``spark.catalog.clearCache()`` (the bench harness clears
-    between reps): without this, every later consumer silently
-    recomputes the shared pipeline per reference."""
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        df.cache()
-    return df
 
 
 # One portable-signature frame over the planted corpus serves the q31
@@ -776,37 +749,23 @@ def _ensure_cached(df: DataFrame) -> DataFrame:
 # q121's re-offer batch synthesizes (`text || ' zz' || id%97`) — so
 # two of q121's three signature builds are the same rows under a
 # different key. Bounded: one 32-long array per planted doc.
-_MINHASH_SIG_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memoized
 def _minhash_sigs_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    sigs = _MINHASH_SIG_MEMO.get(key)
-    if sigs is not None:
-        return _ensure_cached(sigs)
     corpus = _planted_corpus(spark, sf_dir)
-    sigs = D.minhash_signatures_portable(
+    return D.minhash_signatures_portable(
         corpus, "text", "doc_id", num_hashes=MINHASH_PORT_HASHES
     ).cache()
-    _MINHASH_SIG_MEMO[key] = sigs
-    return sigs
 
 
+@session_memoized
 def _minhash_pairs_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    pairs = _MINHASH_PAIR_MEMO.get(key)
-    if pairs is not None:
-        return _ensure_cached(pairs)
-    if pairs is None:
-        corpus = _planted_corpus(spark, sf_dir)
-        pairs = D.minhash_lsh_pairs_portable(
-            corpus, "text", "doc_id",
-            num_hashes=MINHASH_PORT_HASHES, bands=MINHASH_PORT_BANDS,
-            max_df=MINHASH_MAX_DF,
-            sigs=_minhash_sigs_shared(spark, sf_dir),
-        ).cache()
-        _MINHASH_PAIR_MEMO[key] = pairs
-    return pairs
+    corpus = _planted_corpus(spark, sf_dir)
+    return D.minhash_lsh_pairs_portable(
+        corpus, "text", "doc_id",
+        num_hashes=MINHASH_PORT_HASHES, bands=MINHASH_PORT_BANDS,
+        max_df=MINHASH_MAX_DF,
+        sigs=_minhash_sigs_shared(spark, sf_dir),
+    ).cache()
 
 
 def q31_dedup_minhash(spark, sf_dir):
@@ -879,22 +838,12 @@ SQL_Q31 = _sql_minhash_portable_pairs("0.5")
 # pipeline instead of one per consumer. A split design (sign base and
 # planted halves separately, union) measured SLOWER for q32 (+1.4 s at
 # sf0.1): two aggregation pipelines + a cache barrier cost more than
-# the single fused pass. Tiny frame (doc id + one long per row);
-# session-lived like _MINHASH_PAIR_MEMO, deliberately not in
-# _cached_inputs.
-_SIMHASH_SIG_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+# the single fused pass. Tiny frame (doc id + one long per row); a
+# session memo like the minhash pairs.
+@session_memoized
 def _planted_simhash_sigs(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    sigs = _SIMHASH_SIG_MEMO.get(key)
-    if sigs is not None:
-        return _ensure_cached(sigs)
-    if sigs is None:
-        corpus = _planted_corpus(spark, sf_dir)
-        sigs = D.simhash(corpus, "text", "doc_id").cache()
-        _SIMHASH_SIG_MEMO[key] = sigs
-    return sigs
+    corpus = _planted_corpus(spark, sf_dir)
+    return D.simhash(corpus, "text", "doc_id").cache()
 
 
 SIMHASH_PORT_HAMMING = 3  # 4 bands of 8 bits: pigeonhole recall EXACT here
@@ -1006,40 +955,24 @@ WHERE round(CAST(CAST((inter::DOUBLE / (sa.sz + sb.sz - inter)) AS VARCHAR) AS D
 
 # Exact-jaccard pair frame shared by its consumers (q33 demo, q68
 # clusters, q69 apply) — identical pipeline, identical corpus; cached
-# and memoized per (session, sf_dir) like _MINHASH_PAIR_MEMO. Bounded:
+# and memoized per (session, sf_dir) like the minhash pairs. Bounded:
 # two ids + two numbers per near-dup pair.
-_JACCARD_PAIR_MEMO: dict[tuple[int, str], DataFrame] = {}
-_SHINGLE_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memoized
 def _shingles_shared(spark, sf_dir) -> DataFrame:
     """One cached (doc, shingle-hash) frame for the whole exact-jaccard
     family (q33 via the pair memo, the max_df variant q67) — the
     shingle explode is the family's dominant shared cost."""
-    key = _memo_key(spark, sf_dir)
-    sh = _SHINGLE_MEMO.get(key)
-    if sh is not None:
-        return _ensure_cached(sh)
-    if sh is None:
-        corpus = _planted_corpus(spark, sf_dir)
-        sh = D.shingle_hash_rows(corpus, "text", "doc_id", shingle_n=3).cache()
-        _SHINGLE_MEMO[key] = sh
-    return sh
+    corpus = _planted_corpus(spark, sf_dir)
+    return D.shingle_hash_rows(corpus, "text", "doc_id", shingle_n=3).cache()
 
 
+@session_memoized
 def _jaccard_pairs_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    pairs = _JACCARD_PAIR_MEMO.get(key)
-    if pairs is not None:
-        return _ensure_cached(pairs)
-    if pairs is None:
-        corpus = _planted_corpus(spark, sf_dir)
-        pairs = D.ngram_jaccard_pairs(
-            corpus, "text", "doc_id", shingle_n=3, threshold=JACCARD_TAU,
-            shingles=_shingles_shared(spark, sf_dir),
-        ).cache()
-        _JACCARD_PAIR_MEMO[key] = pairs
-    return pairs
+    corpus = _planted_corpus(spark, sf_dir)
+    return D.ngram_jaccard_pairs(
+        corpus, "text", "doc_id", shingle_n=3, threshold=JACCARD_TAU,
+        shingles=_shingles_shared(spark, sf_dir),
+    ).cache()
 
 
 def memo_builders():
@@ -1114,19 +1047,11 @@ pairs AS (
 # One connected-components run serves all cluster consumers (q68 map,
 # q69 keep-min apply, q96 keep-best apply) — identical pair input ⇒
 # identical labels. The iterative label-propagation loop is the
-# family's dominant cost after the pair memo; session-lived like
-# _MINHASH_PAIR_MEMO (two longs per clustered doc).
-_CLUSTER_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+# family's dominant cost after the pair memo; a session memo (two
+# longs per clustered doc).
+@session_memoized
 def _dup_clusters_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    cl = _CLUSTER_MEMO.get(key)
-    if cl is not None:
-        return _ensure_cached(cl)
-    cl = D.dup_clusters(_jaccard_pairs_shared(spark, sf_dir)).cache()
-    _CLUSTER_MEMO[key] = cl
-    return cl
+    return D.dup_clusters(_jaccard_pairs_shared(spark, sf_dir)).cache()
 
 
 def q68_dup_clusters(spark, sf_dir):
@@ -1597,34 +1522,20 @@ UNIGRAM_VOCAB = 20
 # per-source perplexity table; the Stupid-Backoff bigram LM likewise
 # serves q95 and q123's proxy model. Each consumer previously re-ran
 # the identical train+score pipeline (guide §1.2). Bounded: 3 scalars
-# per document. Session-lived like _MINHASH_PAIR_MEMO; bench times the
-# builds as their own ``_memo_unigram_lm`` / ``_memo_bigram_lm`` lines.
-_UNIGRAM_LM_MEMO: dict[tuple[int, str], DataFrame] = {}
-_BIGRAM_LM_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+# per document. Session memos; bench times the builds as their own
+# ``_memo_unigram_lm`` / ``_memo_bigram_lm`` lines.
+@session_memoized
 def _unigram_lm_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _UNIGRAM_LM_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     docs = _t(spark, sf_dir, "documents")
-    got = TX.unigram_logprob(
+    return TX.unigram_logprob(
         docs, "text", "doc_id", vocab_size=UNIGRAM_VOCAB
     ).cache()
-    _UNIGRAM_LM_MEMO[key] = got
-    return got
 
 
+@session_memoized
 def _bigram_lm_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _BIGRAM_LM_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     docs = _t(spark, sf_dir, "documents")
-    got = TX.bigram_logprob(docs, "text", "doc_id").cache()
-    _BIGRAM_LM_MEMO[key] = got
-    return got
+    return TX.bigram_logprob(docs, "text", "doc_id").cache()
 
 
 def q84_unigram_logprob(spark, sf_dir):
@@ -2076,16 +1987,10 @@ EMB_DIM = 64
 # re-ran the full iterative Lloyd chain (guide §1.2: don't compute
 # things you throw away). Bounded state: k rows × dim doubles for the
 # centroids, (id, cluster, cos) per vector for the assignment.
-# Session-lived like _MINHASH_PAIR_MEMO; bench times the build as its
-# own ``_memo_kmeans_assign`` line.
-_KMEANS_MEMO: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# A session memo; bench times the build as its own
+# ``_memo_kmeans_assign`` line.
+@session_memoized
 def _kmeans_shared(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
-    key = _memo_key(spark, sf_dir)
-    got = _KMEANS_MEMO.get(key)
-    if got is not None:
-        return (_ensure_cached(got[0]), _ensure_cached(got[1]))
     emb = _t(spark, sf_dir, "embeddings")
     # the centroid frame localCheckpoints (k rows; its LINEAGE is the
     # whole iterative Lloyd tree — consumers would otherwise re-pay
@@ -2097,7 +2002,6 @@ def _kmeans_shared(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
     assign = S.kmeans_lloyd_exact(emb, "vec_id", "embedding",
                                   k=KMEANS_K, iters=KMEANS_ITERS,
                                   centroids=cent).cache()
-    _KMEANS_MEMO[key] = (cent, assign)
     return cent, assign
 
 
@@ -2624,7 +2528,6 @@ def q41_ann_ivf(spark, sf_dir):
                                       iters=1, return_assignment=True)
     out = S.ann_topk_ivf(emb, queries_df, "vec_id", "embedding", ANN_K,
                          centroids, nprobe=8, assigned=assigned)
-    out._cached_inputs = [assigned]  # see functions.dedup.release
     return out
 
 
@@ -3998,15 +3901,9 @@ PQ_D = 16  # EMB_DIM // PQ_M
 # One codebook training + encoding pass serves the whole PQ family
 # (q97 codes, q98 ADC, q99 rerank) — identical config, identical
 # corpus. Codebooks are m·k rows; codes are m small ints per vector.
-# Session-lived like the other family memos.
-_PQ_MEMO: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# A session memo like the other families.
+@session_memoized
 def _pq_shared(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
-    key = _memo_key(spark, sf_dir)
-    hit = _PQ_MEMO.get(key)
-    if hit is not None:
-        return _ensure_cached(hit[0]), _ensure_cached(hit[1])
     emb = _t(spark, sf_dir, "embeddings")
     books = S.pq_train_exact(
         emb, "vec_id", "embedding", EMB_DIM, m=PQ_M, k=PQ_K, iters=PQ_ITERS
@@ -4014,7 +3911,6 @@ def _pq_shared(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
     codes = S.pq_codes(
         emb, "vec_id", "embedding", books, EMB_DIM, m=PQ_M
     ).cache()
-    _PQ_MEMO[key] = (books, codes)
     return books, codes
 
 
@@ -4206,7 +4102,6 @@ def q100_ann_ivfpq(spark, sf_dir):
         centroids, books, codes, m=PQ_M, k=ANN_K, nprobe=IVFPQ_LISTS,
         assigned=assigned,
     )
-    out._cached_inputs = [assigned]  # see functions.dedup.release
     return out
 
 
@@ -4409,19 +4304,11 @@ RS_K, RS_MIN_TOKENS = 8, 16
 # One duplicated-positional-gram frame serves BOTH span detectors
 # (q106 report, q107 apply) — identical corpus, identical k, identical
 # hashed→occ→dup prefix. Bounded: one row per DUPLICATED gram
-# position, not per corpus token. Session-lived like the family memos.
-_SPAN_DUP_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+# position, not per corpus token. A session memo like the families.
+@session_memoized
 def _span_dup_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _SPAN_DUP_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    got = D.span_dup_frame(docs, "text", "doc_id", k=RS_K).cache()
-    _SPAN_DUP_MEMO[key] = got
-    return got
+    return D.span_dup_frame(docs, "text", "doc_id", k=RS_K).cache()
 
 
 def q106_repeated_spans(spark, sf_dir):
@@ -4684,24 +4571,16 @@ PCA_ITERS, PCA_DIM = 3, 64
 # the SAME embeddings corpus — 3 independent trainings of ~D·iters
 # collect-jobs each (q109/q112's top-1 is arithmetically component 1
 # of q118's deflated top-D chain, see pca_power_topd_train). One
-# session-lived training (the _QC_SCORED_MEMO contract: model-sized
+# session-memo training (the _qc_scored_shared contract: model-sized
 # driver state, D·dim+dim floats, plus the checkpointed centered
 # frame) now feeds all three.
-_PCA_MEMO: dict[tuple[int, str],
-                tuple[list[list[float]], list[float], DataFrame]] = {}
-
-
+@session_memoized
 def _pca_shared(spark, sf_dir):
-    key = _memo_key(spark, sf_dir)
-    got = _PCA_MEMO.get(key)
-    if got is None:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        got = S.pca_power_topd_train(
-            emb, "vec_id", "embedding", dim=PCA_DIM,
-            n_components=PCA_TOPD, iters=PCA_ITERS,
-        )
-        _PCA_MEMO[key] = got
-    return got
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return S.pca_power_topd_train(
+        emb, "vec_id", "embedding", dim=PCA_DIM,
+        n_components=PCA_TOPD, iters=PCA_ITERS,
+    )
 
 
 def _pca_model_frame(spark, sf_dir):
@@ -5142,17 +5021,11 @@ def _qc_features(spark, sf_dir):
 
 # q104's scored frame feeds q161 (AUC), q168 (kappa) and q174
 # (threshold sweep); without a memo each consumer re-pays the 4-scan
-# training loop + scoring pass. Same contract as _RETRIEVAL_MEMO.
-_QC_SCORED_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+# training loop + scoring pass. Same contract as _retrieval_shared.
+@session_memoized
 def _qc_scored_shared(spark, sf_dir) -> DataFrame:
     from .functions import classify as C
 
-    key = _memo_key(spark, sf_dir)
-    df = _QC_SCORED_MEMO.get(key)
-    if df is not None:
-        return _ensure_cached(df)
     # localCheckpoint for the build: logreg_train's count + QC_ITERS
     # gradient scans and the scoring pass otherwise EACH re-ran the
     # regex-heavy quality_features pipeline (6 rebuilds — measured
@@ -5162,14 +5035,12 @@ def _qc_scored_shared(spark, sf_dir) -> DataFrame:
     feats = _qc_features(spark, sf_dir).localCheckpoint()
     w = C.logreg_train(feats, QC_FEATURES, "label",
                        iters=QC_ITERS, lr=QC_LR)
-    df = C.logreg_score(feats, QC_FEATURES, w).select(
+    return C.logreg_score(feats, QC_FEATURES, w).select(
         "doc_id",
         F.col("label").cast("long").alias("label"),
         "p_good",
         "pred",
     ).cache()
-    _QC_SCORED_MEMO[key] = df
-    return df
 
 
 def q104_quality_classifier(spark, sf_dir):
@@ -5727,13 +5598,10 @@ KN_DISCOUNT = 0.75
 
 
 # Result frames of the eval-split retrieval family, memoized per
-# (session, sf_dir) like _MINHASH_PAIR_MEMO: q150 re-reads q124+q131
+# (session, sf_dir) like the minhash pairs: q150 re-reads q124+q131
 # and q180 re-reads q124+q177, so without the memo each audit re-pays
 # its parents' full index build. Bounded: |queries|*k rows per entry.
-_RETRIEVAL_MEMO: dict[tuple[int, str, str], DataFrame] = {}
-_POSTINGS_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memoized
 def _postings_shared(spark, sf_dir: str) -> DataFrame:
     """The session-lived inverted-index base table (w, doc, tf) over
     the eval-split corpus side — built+cached ONCE and handed to every
@@ -5742,10 +5610,6 @@ def _postings_shared(spark, sf_dir: str) -> DataFrame:
     corpus scans per bench rep for one identical frame)."""
     from .functions import retrieval as RV
 
-    key = _memo_key(spark, sf_dir)
-    df = _POSTINGS_MEMO.get(key)
-    if df is not None:
-        return _ensure_cached(df)
     corpus, _ = _eval_split_queries(spark, sf_dir)
     # repartition by the scoring chain's dominant key before caching:
     # AQE coalesces the build's (w, doc) agg to ~1 partition at bench
@@ -5753,10 +5617,8 @@ def _postings_shared(spark, sf_dir: str) -> DataFrame:
     # stage; "w" partitioning also lines the cache up with the
     # per-term joins/aggs downstream (partition count follows
     # spark.sql.shuffle.partitions — scale-adaptive, not a constant)
-    df = (RV.corpus_postings(corpus, "text", "doc_id")
-          .repartition("w").cache())
-    _POSTINGS_MEMO[key] = df
-    return df
+    return (RV.corpus_postings(corpus, "text", "doc_id")
+            .repartition("w").cache())
 
 
 def _eval_split_queries(spark, sf_dir):
@@ -5774,13 +5636,10 @@ def _eval_split_queries(spark, sf_dir):
     return docs.where(F.col("doc_id") % 50 != 0), qs
 
 
+@session_memoized
 def _retrieval_shared(spark, sf_dir: str, which: str) -> DataFrame:
     from .functions import retrieval as RV
 
-    key = _memo_key(spark, sf_dir, which)
-    df = _RETRIEVAL_MEMO.get(key)
-    if df is not None:
-        return _ensure_cached(df)
     corpus, qs = _eval_split_queries(spark, sf_dir)
     pt = _postings_shared(spark, sf_dir)
     if which == "bm25":
@@ -5794,9 +5653,7 @@ def _retrieval_shared(spark, sf_dir: str, which: str) -> DataFrame:
     else:
         df = RV.ql_topk(corpus, qs, "text", "doc_id", k=BM25_TOPK,
                         postings=pt)
-    df = df.cache()
-    _RETRIEVAL_MEMO[key] = df
-    return df
+    return df.cache()
 
 
 def q124_bm25_topk(spark, sf_dir):
@@ -6462,7 +6319,6 @@ def q168_filter_agreement(spark, sf_dir):
     a = q70_quality_filter(spark, sf_dir).select("doc_id", "keep")
     b = q104_quality_classifier(spark, sf_dir).select("doc_id", "pred")
     out = C.kappa_agreement(a, b, "doc_id", "keep", "pred")
-    out._cached_inputs = getattr(b, "_cached_inputs", [])
     return out
 
 
@@ -6816,8 +6672,9 @@ def q143_mmr_rerank(spark, sf_dir):
         F.col("vec_id").alias("doc_id"), "embedding"
     )
     out = RV.mmr_rerank(pool, emb, k=MMR_K, lam=MMR_LAM)
-    # the operator's own persisted sims matrix is released after the
-    # consuming action; the pool memo is deliberately session-lived
+    # the operator's own persisted sims matrix is freed by
+    # util.release after the consuming action; the pool memo is
+    # deliberately session-lived
     return out
 
 
@@ -6891,39 +6748,25 @@ IVF_NPROBE = 2
 # ann_topk_ivf_portable call) and the brute-force truth ranking
 # (q35 + q142 + q194) are each computed once per session — the two
 # recall/nDCG audits otherwise re-ran both ranking pipelines in
-# full (guide §1.2). Bounded: |queries| × k rows each. Session-lived
-# like _KMEANS_MEMO; bench times the builds as their own
+# full (guide §1.2). Bounded: |queries| × k rows each. Session memos
+# like _kmeans_shared; bench times the builds as their own
 # ``_memo_ivf_topk`` / ``_memo_ann_brute`` lines.
-_IVF_TOPK_MEMO: dict[tuple[int, str], DataFrame] = {}
-_ANN_BRUTE_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memoized
 def _ivf_topk_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _IVF_TOPK_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     emb = _t(spark, sf_dir, "embeddings")
-    got = S.ann_topk_ivf_portable(
+    return S.ann_topk_ivf_portable(
         emb, "vec_id", "embedding", ANN_NUM_QUERIES, k=ANN_K,
         k_lists=KMEANS_K, iters=KMEANS_ITERS, nprobe=IVF_NPROBE,
         centroids=_kmeans_shared(spark, sf_dir)[0],
     ).cache()
-    _IVF_TOPK_MEMO[key] = got
-    return got
 
 
+@session_memoized
 def _ann_brute_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _ANN_BRUTE_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") <= ANN_NUM_QUERIES)
-    got = S.ann_topk_bruteforce(
+    return S.ann_topk_bruteforce(
         emb, queries, "vec_id", "embedding", ANN_K).cache()
-    _ANN_BRUTE_MEMO[key] = got
-    return got
 
 
 def q142_ivf_recall(spark, sf_dir):
@@ -7039,7 +6882,6 @@ def q140_mad_outliers(spark, sf_dir):
         F.col("_med").alias("med"), F.col("_mad").alias("mad"),
         "robust_z",
     )
-    res._cached_inputs = getattr(out, "_cached_inputs", [])
     return res
 
 
@@ -7105,7 +6947,6 @@ def q157_anomaly_ensemble(spark, sf_dir):
         F.col("vote_cusum").cast("long").alias("vote_cusum"),
         "n_votes",
     )
-    out._cached_inputs = getattr(m, "_cached_inputs", [])
     return out
 
 
@@ -7428,19 +7269,11 @@ RRF_QMAX = 5_000
 # One hybrid-RRF pool serves q134 AND q143's MMR re-rank (which
 # previously re-ran the whole champion-BM25 + brute-cosine + fusion
 # chain to build its candidate pool). Bounded: ≤ RRF_TOPK rows per
-# eval query. Session-lived like the other family memos; bench times
+# eval query. A session memo like the other families; bench times
 # the build as its own ``_memo_hybrid_rrf`` line.
-_RRF_POOL_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memoized
 def _rrf_pool_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _RRF_POOL_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
-    got = _hybrid_rrf_build(spark, sf_dir).cache()
-    _RRF_POOL_MEMO[key] = got
-    return got
+    return _hybrid_rrf_build(spark, sf_dir).cache()
 
 
 def q134_hybrid_rrf(spark, sf_dir):
@@ -7747,7 +7580,6 @@ def q161_classifier_auc(spark, sf_dir):
 
     scored = q104_quality_classifier(spark, sf_dir)
     out = C.auc_score(scored, "p_good", "label")
-    out._cached_inputs = getattr(scored, "_cached_inputs", [])
     return out
 
 
@@ -8159,7 +7991,6 @@ def q171_bootstrap_ci(spark, sf_dir):
         rnd(F.avg("x"), 6).alias("mean_chars"),
     )
     out = est.join(bands, "source")
-    out._cached_inputs = getattr(bands, "_cached_inputs", [])
     return out
 
 
@@ -8318,7 +8149,6 @@ def q174_threshold_sweep(spark, sf_dir):
 
     scored = q104_quality_classifier(spark, sf_dir)
     out = C.threshold_sweep(scored, "p_good", "label", taus=SWEEP_TAUS)
-    out._cached_inputs = getattr(scored, "_cached_inputs", [])
     return out
 
 
@@ -8948,14 +8778,14 @@ def q185_vocab_overlap(spark, sf_dir):
     value-hash oracled."""
     docs = _t(spark, sf_dir, "documents")
     # persisted: the distinct (source, token) frame feeds the size agg
-    # AND both self-join sides — one corpus scan, not three (released
-    # via the _cached_inputs contract)
-    sv = fan_out(docs).select(
+    # AND both self-join sides — one corpus scan, not three (freed by
+    # util.release)
+    sv = own_cache(fan_out(docs).select(
         "source",
         F.explode(
             F.split(F.lower(F.trim(F.col("text"))), r"\s+")
         ).alias("w"),
-    ).distinct().persist()
+    ).distinct().persist())
     vs = sv.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("v"))
     a = sv.select(F.col("source").alias("src_a"), "w")
@@ -8981,7 +8811,6 @@ def q185_vocab_overlap(spark, sf_dir):
             6,
         ).alias("jaccard"),
     )
-    out._cached_inputs = [sv]  # see functions.dedup.release
     return out
 
 
@@ -9028,9 +8857,9 @@ def q186_length_emd(spark, sf_dir):
     # persisted: the (source, length) count frame (group-count sized —
     # |sources|·|distinct lengths| rows at ANY corpus size) feeds the
     # grid, source list, totals, and ECDF — one corpus scan, not four
-    cnts = docs.select("source", x.alias("x")).groupBy(
-        "source", "x").agg(F.count(F.lit(1)).cast("long").alias("c")) \
-        .persist()
+    cnts = own_cache(docs.select("source", x.alias("x")).groupBy(
+        "source", "x").agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .persist())
     grid = cnts.select("x").distinct()
     wv = Window.partitionBy().orderBy("x")
     grid_d = grid.select(
@@ -9065,7 +8894,6 @@ def q186_length_emd(spark, sf_dir):
         rnd(F.sum(F.abs(F.col("fa") - F.col("fb")) * F.col("dx")), 4)
         .alias("w1_chars")
     )
-    out._cached_inputs = [cnts]  # see functions.dedup.release
     return out
 
 
@@ -10378,27 +10206,21 @@ def _synth_html_expr(chrome_only_mod: int | None = None):
 # sf0.1). The BLOCK frame — (doc_id, source[, url],
 # array<struct<t,lt>>) — is the shared intermediate every consumer
 # filters/aggregates, so it is memoized per (session, sf_dir,
-# variant) like _MINHASH_PAIR_MEMO and registered in memo_builders()
+# variant) like the minhash pairs and registered in memo_builders()
 # so bench attributes each build as its own _memo_* line. On a real
 # cluster the same cut is a stage-0 parquet materialization the
 # downstream queries all scan — the session cache is the local-mode
 # twin of that shape. Oracles are untouched: DuckDB re-runs the full
 # SQL chain per query, which is exactly why memoizing the Spark side
 # cannot mask a rule change.
-_HTML_BLOCKS_MEMO: dict[tuple[int, str, str], DataFrame] = {}
-
-
-def _html_blocks_shared(spark, sf_dir, variant="plain"):
+@session_memoized
+def _html_blocks_shared(spark, sf_dir, variant):
     """The extracted block frame for one synthesis variant:
     ``plain`` (q203/q207), ``audit`` (q206 — derived from plain: the
     corpus differs ONLY on the chrome-only plant rows, so only the
     1/17 planted pages re-run the extraction regexps), ``crawl``
     (q201 — the funnel corpus with urls and re-fetch/mirror plants).
     """
-    key = _memo_key(spark, sf_dir, variant)
-    df = _HTML_BLOCKS_MEMO.get(key)
-    if df is not None:
-        return df
     if variant == "plain":
         docs = _t(spark, sf_dir, "documents").select(
             "doc_id", "source", "text")
@@ -10425,9 +10247,7 @@ def _html_blocks_shared(spark, sf_dir, variant="plain"):
             H.html_block_structs(F.col("html")).alias("blk"))
     else:
         raise ValueError(f"unknown html-blocks variant {variant!r}")
-    df = df.persist()
-    _HTML_BLOCKS_MEMO[key] = df
-    return df
+    return df.persist()
 
 
 def q203_html_extract(spark, sf_dir):
@@ -10770,7 +10590,7 @@ def q205_license_rollup(spark, sf_dir):
     # policy table derives from enr's DISTINCT domains, so without it
     # the URL-synth + canonicalization + PSL-join + tokenize chain ran
     # twice — once under the broadcast build, once on the fact side
-    enr = enr.cache()
+    enr = own_cache(enr.cache())
     policy = domain_policy(enr)
     joined = enr.join(F.broadcast(policy), "domain")
     out = (
@@ -10781,7 +10601,6 @@ def q205_license_rollup(spark, sf_dir):
             F.sum("n_tok").cast("long").alias("n_tokens"),
         )
     )
-    out._cached_inputs = [enr]  # see functions.dedup.release
     return out
 
 
@@ -10955,12 +10774,12 @@ def q201_curation_funnel_v2(spark, sf_dir):
     n_tok = F.size(toks)
     distinct_ratio = rnd(
         F.size(F.array_distinct(toks)) / n_tok.cast("double"), 6)
-    flags = f3.withColumn(
+    flags = own_cache(f3.withColumn(
         "k5",
         F.col("k3") & (n_tok >= FUN2_MIN_TOKENS)
         & (n_tok <= FUN2_MAX_TOKENS)
         & (distinct_ratio >= FUN2_MIN_DISTINCT_RATIO),
-    ).persist()
+    ).persist())
     counts = flags.agg(
         F.count(F.lit(1)).cast("long").alias("n0"),
         F.sum(F.col("k1").cast("long")).cast("long").alias("n1"),
@@ -11004,7 +10823,6 @@ def q201_curation_funnel_v2(spark, sf_dir):
                   F.col("n3") - F.col("n5")),
         )).alias("s")
     ).select("s.*")
-    out._cached_inputs = [flags]
     return out
 
 
@@ -11533,18 +11351,10 @@ TRAP_SESSION_QUERY_RE = r"(^|&)(sessionid|sid|phpsessid)="
 # composition (which previously re-ran both chains per bench rep):
 # one cached copy each of the trap audit (q209) and the outlink graph
 # (q212). Bounded: one row per registrable domain.
-_CRAWL_DOMAIN_MEMO: dict[tuple[int, str, str], DataFrame] = {}
-
-
+@session_memoized
 def _crawl_domain_shared(spark, sf_dir, which: str) -> DataFrame:
-    key = _memo_key(spark, sf_dir, which)
-    got = _CRAWL_DOMAIN_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     build = {"trap": _trap_audit_build, "graph": _outlink_graph_build}[which]
-    got = build(spark, sf_dir).cache()
-    _CRAWL_DOMAIN_MEMO[key] = got
-    return got
+    return build(spark, sf_dir).cache()
 
 
 def q209_crawl_trap_audit(spark, sf_dir):
@@ -11776,12 +11586,12 @@ def q211_domain_split_leakage(spark, sf_dir):
     # six aggregation branches below (2 schemes × sizes/straddle/leak)
     # each re-ran the URL-synth + canonicalization + PSL-join + md5
     # chain — 6 corpus passes for one ~50-byte/doc spine
-    both = enr.select(
+    both = own_cache(enr.select(
         "doc_id", "h", "domain",
         split_col(shard_hash(F.col("doc_id"), 100)).alias("by_doc"),
         split_col(shard_hash(D.fp32_expr(F.col("domain")), 100))
         .alias("by_domain"),
-    ).cache()
+    ).cache())
     frames = []
     for scheme in ("by_doc", "by_domain"):
         s = F.col(scheme)
@@ -11804,7 +11614,6 @@ def q211_domain_split_leakage(spark, sf_dir):
         )
         frames.append(sizes.crossJoin(straddle).crossJoin(leak))
     out = frames[0].unionByName(frames[1])
-    out._cached_inputs = [both]  # see functions.dedup.release
     return out
 
 
@@ -12428,19 +12237,14 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "q192_passage_near_dups": (q192_passage_near_dups, SQL_Q192),
     "q107_span_dedup_apply": (q107_span_dedup_apply, SQL_Q107),
     "q201_curation_funnel_v2": (q201_curation_funnel_v2, SQL_Q201),
-    "q75_quantize_embeddings": (q75_quantize_embeddings, SQL_Q75),
-    "q117_image_dup_pairs": (q117_image_dup_pairs, SQL_Q117),
-    "q36_ann_lsh": (q36_ann_lsh, SQL_Q36),
-    "q50_sketch_stats": (q50_sketch_stats, SQL_Q50),
-    "q90_bpe_merges": (q90_bpe_merges, SQL_Q90),
-    "q01_pricing_summary": (q01_pricing_summary, SQL_Q01),
-    # ---- tail (staleness-guarded; see tests/test_tail_staleness.py)
-    # ordered oldest-driver-recording-first.
+    "q119_training_assembly": (q119_training_assembly, SQL_Q119),
     "q02_describe_stats": (q02_describe_stats, SQL_Q02),
     "q03_percentiles": (q03_percentiles, SQL_Q03),
     "q06_pivot_wide": (q06_pivot_wide, SQL_Q06),
     "q09_device_filter": (q09_device_filter, SQL_Q09),
     "q10_resample": (q10_resample, SQL_Q10),
+    # ---- tail (staleness-guarded; see tests/test_tail_staleness.py)
+    # ordered oldest-driver-recording-first.
     "q11_minmax_argmax": (q11_minmax_argmax, SQL_Q11),
     "q12_restart_insert": (q12_restart_insert, SQL_Q12),
     "q13_intersect_headers": (q13_intersect_headers, SQL_Q13),
@@ -12583,7 +12387,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "q212_outlink_graph": (q212_outlink_graph, SQL_Q212),
     "q217_frontier_priority": (q217_frontier_priority, SQL_Q217),
     "q106_repeated_spans": (q106_repeated_spans, SQL_Q106),
-    "q119_training_assembly": (q119_training_assembly, SQL_Q119),
     "q213_robots_rules": (q213_robots_rules, SQL_Q213),
     "q214_line_dedup": (q214_line_dedup, SQL_Q214),
     "q215_warc_headers": (q215_warc_headers, SQL_Q215),
@@ -12601,6 +12404,12 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "q70_quality_filter": (q70_quality_filter, SQL_Q70),
     "q71_chunk_documents": (q71_chunk_documents, SQL_Q71),
     "q73_pack_sequences": (q73_pack_sequences, SQL_Q73),
+    "q75_quantize_embeddings": (q75_quantize_embeddings, SQL_Q75),
+    "q117_image_dup_pairs": (q117_image_dup_pairs, SQL_Q117),
+    "q36_ann_lsh": (q36_ann_lsh, SQL_Q36),
+    "q50_sketch_stats": (q50_sketch_stats, SQL_Q50),
+    "q90_bpe_merges": (q90_bpe_merges, SQL_Q90),
+    "q01_pricing_summary": (q01_pricing_summary, SQL_Q01),
 }
 
 

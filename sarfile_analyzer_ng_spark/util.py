@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -64,16 +66,116 @@ def fan_out(df: DataFrame) -> DataFrame:
     core no matter how many executors exist. Round-robin repartition
     to ``defaultParallelism`` when the input is coarser; a no-op at
     real scale, where scans already produce ≥ cores partitions.
+
+    Decided from the physical plan and never by running a job: a frame
+    above an Exchange (or wrapped by AQE, which also covers exchanges
+    inside cached relations and subqueries) is left alone — its
+    partition count is only known by materializing the stage, and the
+    answer then depends on what the session ran before. Only over
+    exchange-free plans (file scans and narrow operators on them) is
+    the partition count read, which plans the splits but runs nothing.
     """
     if df.isStreaming:
         # partitioning is the stream source's concern (maxFilesPerTrigger
         # etc.), and .rdd is illegal on a streaming frame
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if plan.startswith("AdaptiveSparkPlan") or "Exchange" in plan:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+# --------------------------------------------------------------------
+# Cache lifetime. Every frame the engine caches lives by one of two
+# rules, both kept on the SparkSession object so nothing outlives it:
+#   - a session memo (session_memo / session_memoized) is shared by the
+#     queries of one session and dropped with the session;
+#   - a frame an operator caches for its own use (a self-join side, a
+#     reused sub-frame) is registered with own_cache, and the caller
+#     frees all of them with one release(spark) after its action.
+# Caches made while a memo is being built belong to that memo:
+# release() leaves them alone.
+# --------------------------------------------------------------------
+
+
+class _CacheScope:
+    def __init__(self):
+        self.memos: dict = {}  # key -> (value, [(frame, storage level)])
+        self.owned: list[DataFrame] = []
+        self.building = 0  # memo builds in progress
+
+
+def _scope(spark) -> _CacheScope:
+    scope = getattr(spark, "_graft_cache_scope", None)
+    if scope is None:
+        scope = spark._graft_cache_scope = _CacheScope()
+    return scope
+
+
+def session_memo(spark, key: tuple, build):
+    """The session's value for ``key``, from ``build()`` on first use.
+
+    Frames in the value (a frame or a tuple holding frames) that were
+    cached when it was built are re-armed on every hit, so an external
+    ``spark.catalog.clearCache()`` (the bench clears between reps)
+    does not leave later consumers recomputing the shared pipeline
+    per reference."""
+    scope = _scope(spark)
+    hit = scope.memos.get(key)
+    if hit is not None:
+        value, cached = hit
+        for df, level in cached:
+            sl = df.storageLevel
+            if not (sl.useMemory or sl.useDisk):
+                df.persist(level)
+        return value
+    scope.building += 1
+    try:
+        value = build()
+    finally:
+        scope.building -= 1
+    cached = []
+    for df in value if isinstance(value, tuple) else (value,):
+        if isinstance(df, DataFrame):
+            level = df.storageLevel
+            if level.useMemory or level.useDisk:
+                cached.append((df, level))
+    scope.memos[key] = (value, cached)
+    return value
+
+
+def session_memoized(fn):
+    """Decorator form of :func:`session_memo` for ``fn(spark, *args)``,
+    keyed by the function and its positional arguments."""
+    @functools.wraps(fn)
+    def memo(spark, *args):
+        return session_memo(spark, (fn.__qualname__, *args),
+                            lambda: fn(spark, *args))
+    return memo
+
+
+def own_cache(df: DataFrame) -> DataFrame:
+    """Register a frame an operator cached for its own use, to be
+    unpersisted by :func:`release`; returns it, so it wraps the cache
+    call: ``own_cache(x.cache())``. Inside a memo build the frame
+    belongs to the memo and is not registered."""
+    scope = _scope(df.sparkSession)
+    if not scope.building:
+        scope.owned.append(df)
+    return df
+
+
+def release(spark) -> None:
+    """Unpersist every operator-owned cache of the session (see
+    :func:`own_cache`); session memos stay cached. Call after the
+    consuming action."""
+    scope = _scope(spark)
+    for df in scope.owned:
+        df.unpersist()
+    scope.owned.clear()
 
 
 def rnd_np(a, digits: int = 4):
@@ -137,7 +239,7 @@ def rnd_np(a, digits: int = 4):
     return out
 
 
-_COLUMN_MEMO: dict = {}
+_COLUMN_TREES: dict = {}
 
 
 def memo_cols(key: tuple, builder):
@@ -156,9 +258,9 @@ def memo_cols(key: tuple, builder):
     from pyspark import SparkContext
 
     full = (id(SparkContext._gateway), *key)
-    got = _COLUMN_MEMO.get(full)
+    got = _COLUMN_TREES.get(full)
     if got is None:
-        got = _COLUMN_MEMO[full] = builder()
+        got = _COLUMN_TREES[full] = builder()
     return got
 
 

@@ -251,6 +251,40 @@ def test_analyze_section_composes_the_data_tab(sar_df):
     assert metrics == {"%user", "%system", "%idle"}
 
 
+def test_analyze_section_dotted_metric_names(spark, tmp_path):
+    """sadf's io section flattens nested dicts into dotted metric
+    names (io-reads.bread); a bare name in select() would parse the
+    dot as struct access and fail to resolve."""
+    import json as _json
+
+    from sarfile_analyzer_ng_spark.sources.sadf_json import read_sadf_json
+
+    stats = [
+        {"timestamp": {"date": "2024-05-01", "time": t},
+         "io": {"tps": tps, "io-reads": {"rtps": r, "bread": b}}}
+        for t, tps, r, b in [("10:00:00", 3.0, 1.0, 8.0),
+                             ("10:10:00", 5.0, 2.0, 16.0),
+                             ("10:10:00", 7.0, 4.0, 32.0)]
+    ]
+    doc = {"sysstat": {"hosts": [{
+        "nodename": "jhost", "release": "9.9", "file-date": "2024-05-01",
+        "statistics": stats,
+        "restarts": [{"boot": {"date": "2024-05-01", "time": "09:30:00"}}],
+    }]}}
+    (tmp_path / "io.json").write_text(_json.dumps(doc))
+    df = read_sadf_json(spark, str(tmp_path))
+    f = df.select("file").first()["file"]
+    [(device, table, stats_df)] = A.analyze_section(df, f, "io")
+    assert device is None
+    rows = table.orderBy("ts", "is_restart").collect()
+    # duplicate 10:10 sample kept first (ties ordered by the values),
+    # one restart zero row
+    assert [(r["is_restart"], r["io-reads.bread"]) for r in rows] == [
+        (True, 0.0), (False, 8.0), (False, 16.0)]
+    assert {r["metric"] for r in stats_df.collect()} == {
+        "tps", "io-reads.rtps", "io-reads.bread"}
+
+
 def test_statistics_respects_time_window(sar_df):
     """dia_compute_pl.py:63-74 computes describe AFTER the time
     filter; statistics(start, end) must scope the same way."""

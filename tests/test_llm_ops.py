@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import similarity as S
 from sarfile_analyzer_ng_spark.functions import text as TX
+from sarfile_analyzer_ng_spark import util as U
+from sarfile_analyzer_ng_spark.util import release
 
 from .conftest import SF_DIR
 
@@ -46,7 +48,7 @@ def test_simhash_near_pairs(spark):
     assert found[(1, 4)] == 0
     assert found[(1, 2)] <= 7  # measured hamming(1,2) == 6
     assert (1, 3) not in found  # hamming(1,3) == 35
-    D.release(pairs)
+    release(spark)
 
 
 def test_simhash_empty_docs_get_zero(spark):
@@ -79,8 +81,7 @@ def test_lsh_jaccard_matches_exact(spark):
     a = {tuple(r) for r in exact.collect()}
     b = {tuple(r) for r in lsh.collect()}
     assert a == b and len(a) > 0
-    D.release(exact)
-    D.release(lsh)
+    release(spark)
 
 
 def test_lsh_recall_vs_bruteforce(spark):
@@ -380,28 +381,82 @@ def test_pack_sequences_offsets_are_consistent(spark):
             cum += r["n_tokens"]
 
 
-def test_release_leaves_shared_shingle_frame_cached(spark):
+def owned_by(spark, build):
+    """(build(), the frames the call registered for util.release)."""
+    before = len(U._scope(spark).owned)
+    out = build()
+    return out, U._scope(spark).owned[before:]
+
+
+def test_cache_lifecycle_release_and_session_memos(spark):
+    """One cache lifecycle (util): release(spark) unpersists the frames
+    operators cached for their own use and nothing else — not a
+    caller-owned shingle frame, not a session memo, not the caches an
+    operator made while a memo was being built; every memo family
+    re-arms its cached frames after clearCache(); a new session never
+    sees another session's memos."""
+    from sarfile_analyzer_ng_spark import queries as Q
+
     # operators given an externally-owned shingle frame must NOT
-    # unpersist it on release() — it is shared across the dedup family
+    # unpersist it on release — it is shared across the dedup family
     df = docs_df(spark)
     sh = D.shingle_hash_rows(df, "text", "doc_id").cache()
     sh.count()
-    jac = D.ngram_jaccard_pairs(df, "text", "doc_id", shingles=sh)
+    jac, owned = owned_by(spark, lambda: D.ngram_jaccard_pairs(
+        df, "text", "doc_id", shingles=sh))
+    assert owned == []
     jac.count()
-    D.release(jac)
-    assert sh.storageLevel.useMemory  # still cached
     lsh = D.lsh_jaccard_pairs(df, "text", "doc_id", shingles=sh)
     lsh.count()
-    D.release(lsh)
-    assert sh.storageLevel.useMemory
+    release(spark)
+    assert sh.storageLevel.useMemory  # still cached
     # owned path still cleans up after itself
-    jac2 = D.ngram_jaccard_pairs(df, "text", "doc_id")
+    jac2, owned = owned_by(spark, lambda: D.ngram_jaccard_pairs(
+        df, "text", "doc_id"))
     jac2.count()
-    internal = jac2._cached_inputs[0]
-    assert internal.storageLevel.useMemory
-    D.release(jac2)
-    assert not internal.storageLevel.useMemory
+    assert len(owned) == 1 and owned[0].storageLevel.useMemory
+    release(spark)
+    assert not owned[0].storageLevel.useMemory
+    assert U._scope(spark).owned == []
     sh.unpersist()
+
+    # every memo family, built through the one session memo; caches
+    # operators make during a build (the minhash banding, the span
+    # frame) belong to the memo, so nothing lands on the release list
+    families = dict(Q.memo_builders(),
+                    clusters=Q._dup_clusters_shared,
+                    pq=lambda sp, sf: Q._pq_shared(sp, sf)[1])
+    _, owned = owned_by(spark, lambda: [
+        build(spark, SF_DIR) for build in families.values()])
+    assert owned == []
+    memos = {key: hit for key, hit in U._scope(spark).memos.items()
+             if key[1] == SF_DIR}
+    names = {key[0] for key in memos}
+    assert {"_html_blocks_shared", "_pca_shared", "_dup_clusters_shared",
+            "_pq_shared", "_crawl_domain_shared", "_retrieval_shared"} <= names
+    cached = [f for _, frames in memos.values() for f, _ in frames]
+    assert len(cached) >= len(names)  # pca's value holds no cached frame
+    release(spark)
+    assert all(f.storageLevel.useMemory for f in cached)
+    # an external clearCache drops them; the next hit of each family
+    # re-arms its frames (html_blocks included) and serves the same
+    # value (pca: the same training, not a retrain)
+    pca = Q._pca_shared(spark, SF_DIR)
+    spark.catalog.clearCache()
+    assert not any(f.storageLevel.useMemory for f in cached)
+    for build in families.values():
+        build(spark, SF_DIR)
+    assert all(f.storageLevel.useMemory for f in cached)
+    assert Q._pca_shared(spark, SF_DIR) is pca
+
+    # memos live on the session object: a new session builds its own
+    other = spark.newSession()
+    mine = Q._shingles_shared(spark, SF_DIR)
+    theirs = Q._shingles_shared(other, SF_DIR)
+    assert theirs is not mine
+    assert Q._shingles_shared(other, SF_DIR) is theirs
+    theirs.unpersist()
+    spark.catalog.clearCache()
 
 
 def test_quantize_embeddings_roundtrip_error_bounded(spark):
@@ -536,19 +591,18 @@ def test_winnow_guarantee_randomized(spark):
 
 
 def test_ngram_jaccard_maxdf_releases_the_cached_frame(spark):
-    """The owns_cache path with max_df: release() must unpersist the
+    """The owned-shingles path with max_df: release must unpersist the
     frame that was actually cached (pre-anti-join shingles), not the
     derived uncached one — the r4 leak ADVICE flagged."""
     rows = [(i, "common words everywhere " + " ".join(f"u{i}x{j}" for j in range(6)))
             for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = D.ngram_jaccard_pairs(df, "text", "doc_id", shingle_n=3,
-                                threshold=0.0, max_df=3)
+    out, cached = owned_by(spark, lambda: D.ngram_jaccard_pairs(
+        df, "text", "doc_id", shingle_n=3, threshold=0.0, max_df=3))
     out.count()
-    cached = out._cached_inputs
     assert len(cached) == 1
     assert cached[0].storageLevel.useMemory     # the truly cached frame
-    D.release(out)
+    release(spark)
     assert not cached[0].storageLevel.useMemory  # actually unpersisted
 
 
@@ -1692,19 +1746,19 @@ def test_edit_dup_pairs_catches_typos_jaccard_blurs(spark):
     assert all(a < b for a, b in got)
 
 
-def test_edit_dup_pairs_exposes_lsh_cache_for_release(spark):
-    # r8 ADVICE: the banded-signature cache minhash_lsh_pairs attaches
-    # must survive the candidate .select() projection so release()
-    # actually unpersists it — the attribute was read off the projected
-    # frame before, which silently dropped it (storage leak per call).
+def test_edit_dup_pairs_registers_lsh_cache_for_release(spark):
+    # r8 ADVICE: the banded-signature cache minhash_lsh_pairs makes
+    # must be freed by release even though edit_dup_pairs projects the
+    # candidate frame (the old per-frame attribute was lost on
+    # projection: a storage leak per call).
     rows = [(i, f"doc {i} words alpha beta gamma delta") for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = D.edit_dup_pairs(df, "text", "doc_id", tau=0.8)
-    cached = getattr(out, "_cached_inputs", [])
+    out, cached = owned_by(spark, lambda: D.edit_dup_pairs(
+        df, "text", "doc_id", tau=0.8))
     assert len(cached) >= 1
     out.collect()
     assert any(dep.storageLevel.useMemory for dep in cached)
-    D.release(out)
+    release(spark)
     assert all(not dep.storageLevel.useMemory for dep in cached)
 
 
@@ -2078,8 +2132,7 @@ def test_minhash_lsh_pairs_max_df_caps_hot_bands(spark):
     got = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     assert (1000, 1001) in got
     assert not any(a < 300 and b < 300 for a, b in got)
-    D.release(capped)
-    D.release(uncapped)
+    release(spark)
 
 
 def test_minhash_portable_max_df_caps_hot_bands(spark):
@@ -2091,8 +2144,7 @@ def test_minhash_portable_max_df_caps_hot_bands(spark):
     got = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     assert (1000, 1001) in got
     assert not any(a < 300 and b < 300 for a, b in got)
-    D.release(capped)
-    D.release(uncapped)
+    release(spark)
 
 
 def test_incremental_near_dups_max_df_caps_hot_bands(spark):

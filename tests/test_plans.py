@@ -13,6 +13,7 @@ from sarfile_analyzer_ng_spark.queries import (
     q18_topk,
     q37_lang_id,
 )
+from sarfile_analyzer_ng_spark.util import release
 
 from .conftest import SF_DIR
 import pytest
@@ -111,8 +112,7 @@ def test_percentiles_distributed_rank_single_materialization(spark):
     assert "rangepartitioning" in text
     # ranks come from the sorted-partition row ids + fragment offsets
     assert "_pid" in text
-    for dep in getattr(df, "_cached_inputs", ()):
-        dep.unpersist()
+    release(spark)
 
 
 def test_mix_apply_broadcasts_weights_no_corpus_shuffle_join(spark):
@@ -784,3 +784,58 @@ def test_bigram_entropy_doc_keyed_window_no_python(spark):
 
     wins = re.findall(r"Window \[.*?partitionBy.*?\]|Window \[[^\]]*\]", p)
     assert any("doc" in w for w in wins), p
+
+
+def test_query_build_is_probe_free_and_repeatable(spark):
+    """Building a query is a pure function of (conf, data): q119 built
+    three times in one session gives one normalized analyzed plan, and
+    fan_out decides a shuffled frame's layout from the plan without
+    starting a job (a partition-count probe there materializes the AQE
+    stage, and its answer depends on what the session ran before)."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from sarfile_analyzer_ng_spark.catalog import load_table
+    from sarfile_analyzer_ng_spark.queries import q119_training_assembly
+    from sarfile_analyzer_ng_spark.util import fan_out
+    from tools.snapshot_tail import _normalize_plan
+
+    digests = set()
+    for _ in range(3):
+        df = q119_training_assembly(spark, SF_DIR)
+        text = df._jdf.queryExecution().analyzed().toString()
+        digests.add(hashlib.sha256(_normalize_plan(text).encode()).hexdigest())
+        df.collect()  # later builds see a session that ran the query
+    assert len(digests) == 1
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs_in(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc._jsc.clearJobGroup()
+        bus.waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    docs = load_table(spark, SF_DIR, "documents")
+
+    def shuffled():
+        return docs.groupBy("source").agg(F.count("*").alias("n"))
+
+    # the counter sees the job the old probe started
+    _, probe_jobs = jobs_in("probe-shuffled",
+                            lambda: shuffled().rdd.getNumPartitions())
+    assert probe_jobs >= 1
+    out, jobs = jobs_in("fan-out-shuffled", lambda: fan_out(shuffled()))
+    assert jobs == 0
+    assert "Repartition" not in out._jdf.queryExecution().analyzed().toString()
+    # directly above the file scan the partition count is planned, not
+    # run, and the scan still fans out to defaultParallelism
+    out, jobs = jobs_in("fan-out-scan",
+                        lambda: fan_out(docs.select("doc_id", "text")))
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() >= sc.defaultParallelism

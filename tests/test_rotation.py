@@ -5,16 +5,15 @@ window was composed by hand against the rule; fix the window, don't
 edit the rule."""
 
 import importlib.util
-import sys
+import os
+
 import pytest
 
 pytestmark = pytest.mark.driver  # driver-facing gate (see conftest)
 
-
-sys.path.insert(0, "/root/repo")
-
 spec = importlib.util.spec_from_file_location(
-    "snapshot_tail", "/root/repo/tools/snapshot_tail.py")
+    "snapshot_tail", os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "snapshot_tail.py"))
 snapshot_tail = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(snapshot_tail)
 

@@ -62,9 +62,8 @@ def test_registry_outputs_inside_rnd_parity_domain(spark):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from sarfile_analyzer_ng_spark.functions.dedup import release
     from sarfile_analyzer_ng_spark.queries import REGISTRY
-    from sarfile_analyzer_ng_spark.util import RND_PARITY_MAX_SCALED
+    from sarfile_analyzer_ng_spark.util import RND_PARITY_MAX_SCALED, release
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     limit = RND_PARITY_MAX_SCALED / 10**4
@@ -80,7 +79,7 @@ def test_registry_outputs_inside_rnd_parity_domain(spark):
         row = df.agg(
             *[F.max(F.abs(F.col(c))).alias(c) for c in dbl]
         ).first()
-        release(df)
+        release(spark)
         for c in dbl:
             if row[c] is not None and row[c] >= limit:
                 offenders.append((key, c, row[c]))

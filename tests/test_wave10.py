@@ -19,6 +19,7 @@ from sarfile_analyzer_ng_spark.functions import web as W
 from sarfile_analyzer_ng_spark.operators import sketches as SK
 from sarfile_analyzer_ng_spark.operators import timeseries as TS
 from sarfile_analyzer_ng_spark.streaming import ops as SO
+from sarfile_analyzer_ng_spark.util import release
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -189,7 +190,7 @@ def test_passage_near_dups_exact_and_paraphrase(spark):
     )
     pairs = {(r.doc_a, r.idx_a, r.doc_b, r.idx_b): r.est_jaccard
              for r in out.collect()}
-    D.release(out)
+    release(spark)
     # identical boiler passages (docs 2,3 idx 1) are exact
     assert pairs[(2, 1, 3, 1)] == 1.0
     # the paraphrase (doc 4) is found but NOT exact
@@ -209,11 +210,11 @@ def test_passage_near_dups_max_df_cap(spark):
     uncapped = D.passage_near_dup_pairs(df, "text", "doc_id",
                                         passage_words=8)
     n_un = uncapped.count()
-    D.release(uncapped)
+    release(spark)
     capped = D.passage_near_dup_pairs(df, "text", "doc_id",
                                       passage_words=8, max_df=10)
     n_cap = capped.count()
-    D.release(capped)
+    release(spark)
     assert n_un == 30 * 29 // 2 and n_cap == 0
 
 

@@ -11,11 +11,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import similarity as S
 from sarfile_analyzer_ng_spark.functions import web as W
 from sarfile_analyzer_ng_spark.operators import sketches as SK
 from sarfile_analyzer_ng_spark.streaming import ops as SO
+from sarfile_analyzer_ng_spark.util import release
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -156,7 +156,7 @@ def test_rank_sample_quantiles_bounds(spark):
                                    probs=(0.25, 0.5, 0.9),
                                    m=32, shards=4)
     got = {r.p: r for r in out.collect()}
-    D.release(out)
+    release(spark)
     assert set(got) == {0.25, 0.5, 0.9}
     for r in got.values():
         assert r.within_bound
@@ -174,7 +174,7 @@ def test_rank_sample_exact_when_m_covers_shard(spark):
     out = SK.rank_sample_quantiles(df, "value", "event_id",
                                    probs=(0.5,), m=200, shards=2)
     r = out.collect()[0]
-    D.release(out)
+    release(spark)
     # step = 1 everywhere: the summary IS the data, est == exact
     assert r.err_bound == 0 and r.est_rank == r.exact_rank == 50
     assert r.est_value == 50.0 and r.within_bound

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import text as TX
+from sarfile_analyzer_ng_spark.util import release
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -117,7 +118,7 @@ def test_containment_vs_jaccard_story(spark):
     jac = D.ngram_jaccard_pairs(_mk(spark, rows), "text", "doc_id",
                                 threshold=0.0)
     jrows = jac.collect()
-    D.release(jac)
+    release(spark)
     assert jrows and jrows[0].jaccard < 0.3
 
 

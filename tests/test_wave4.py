@@ -16,6 +16,7 @@ from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import similarity as S
 from sarfile_analyzer_ng_spark.functions import text as TX
 from sarfile_analyzer_ng_spark.streaming import ops as SO
+from sarfile_analyzer_ng_spark.util import release
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -40,7 +41,7 @@ def test_moore_lewis_separates_domains(spark):
     df = _ml_corpus(spark)
     out = TX.moore_lewis(df, "text", "doc_id", "ind", vocab_size=4)
     rows = {r.doc_id: r for r in out.collect()}
-    D.release(out)
+    release(spark)
     assert len(rows) == 11
     for i in range(5):
         assert rows[i].ce_diff > 0 and rows[i].selected == 1
@@ -57,7 +58,7 @@ def test_moore_lewis_frozen_model_matches_batch(spark):
     got_batch = {r.doc_id: (r.n_tokens, r.avg_lp_in, r.avg_lp_gen,
                             r.ce_diff, r.selected)
                  for r in batch.collect()}
-    D.release(batch)
+    release(spark)
     model, unk_i, unk_g = TX.moore_lewis_model(df, "text", "ind",
                                                vocab_size=4)
     assert len(model) <= 8 and unk_i < 0 and unk_g < 0
@@ -251,7 +252,7 @@ def test_bootstrap_band_brackets_point_estimate(spark):
 
     out = q171_bootstrap_ci(spark, SF_DIR)
     rows = out.collect()
-    D.release(out)
+    release(spark)
     assert len(rows) == 20  # one per source
     inside = sum(1 for r in rows if r.p5 <= r.mean_chars <= r.p95)
     # a 90% band from 200 replicates should bracket the sample mean
@@ -276,10 +277,10 @@ def test_wave4_plans_stay_jvm_side(spark):
                q174_threshold_sweep, q175_split_leakage):
         df = fn(spark, SF_DIR)
         p = df._jdf.queryExecution().executedPlan().toString()
-        D.release(df)
+        release(spark)
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     # the two LM models and the per-dim stats ride broadcast joins
     p170 = q170_moore_lewis(spark, SF_DIR)
     t = p170._jdf.queryExecution().executedPlan().toString()
-    D.release(p170)
+    release(spark)
     assert "BroadcastHashJoin" in t or "BroadcastNestedLoopJoin" in t

@@ -11,12 +11,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import retrieval as RV
 from sarfile_analyzer_ng_spark.functions import similarity as S
 from sarfile_analyzer_ng_spark.functions import text as TX
 from sarfile_analyzer_ng_spark.operators import stats as ST
 from sarfile_analyzer_ng_spark.streaming import ops as SO
+from sarfile_analyzer_ng_spark.util import release
 
 
 # ------------------------------------------------------------------ #
@@ -129,7 +129,7 @@ def test_winsorized_mean_resists_outlier(spark):
     out = ST.winsorized_stats(df, "value", ["event_type"],
                               lo=0.05, hi=0.95)
     r = out.collect()[0]
-    D.release(out)
+    release(spark)
     assert r.n == 100
     assert r.raw_mean > 10_000          # the outlier drags the mean
     assert r.win_mean < 100             # winsorizing bounds its vote

@@ -19,9 +19,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sarfile_analyzer_ng_spark.functions.dedup import release
 from sarfile_analyzer_ng_spark.queries import REGISTRY, memo_builders
 from sarfile_analyzer_ng_spark.session import get_spark
+from sarfile_analyzer_ng_spark.util import release
 
 
 def main() -> None:
@@ -58,7 +58,7 @@ def main() -> None:
             spark.sparkContext.setJobDescription(None)
             print(f"[subset] rep{rep} {key} {elapsed}s", file=sys.stderr)
             timings[key] = min(timings.get(key, elapsed), elapsed)
-            release(df)
+            release(spark)
         if rep < reps - 1:
             spark.catalog.clearCache()
     print(json.dumps(timings, sort_keys=True))

@@ -17,14 +17,17 @@ Usage: python tools/repin_window.py
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from snapshot_tail import CHANGED_PATH, WINDOW, last_green_rounds  # noqa: E402
+from snapshot_tail import (  # noqa: E402
+    CHANGED_PATH, ROOT, WINDOW, last_green_rounds,
+)
 
-QUERIES_PATH = "/root/repo/sarfile_analyzer_ng_spark/queries.py"
+QUERIES_PATH = os.path.join(ROOT, "sarfile_analyzer_ng_spark", "queries.py")
 ENTRY_RE = re.compile(r'^    "(q\w+)": \(\w+, \w+\),$')
 
 

@@ -35,9 +35,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def worker(cpus: int, sf_dir: str, reps: int, keys: list[str]) -> None:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    from sarfile_analyzer_ng_spark.functions.dedup import release
     from sarfile_analyzer_ng_spark.queries import REGISTRY
     from sarfile_analyzer_ng_spark.session import get_spark
+    from sarfile_analyzer_ng_spark.util import release
 
     spark = get_spark(f"scale_probe_c{cpus}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -63,7 +63,7 @@ def worker(cpus: int, sf_dir: str, reps: int, keys: list[str]) -> None:
                 continue
             execs[key] = min(execs.get(key, 9e9), round(t2 - t1, 3))
             builds[key] = min(builds.get(key, 9e9), round(t1 - t0, 3))
-            release(df)
+            release(spark)
     print(json.dumps({"exec": execs, "build": builds}))
 
 

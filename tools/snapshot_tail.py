@@ -3,7 +3,8 @@ recording window) so tests/test_tail_staleness.py can prove they are
 unchanged since the round that last recorded them green.
 
 Each tail entry gets two digests:
-  - sql_sha:  sha256 of its oracle SQL text (None → "rows-only"),
+  - sql_sha:  sha256 of its oracle SQL text, package data directory
+    replaced by ``<DATA_DIR>`` (None → "rows-only"),
   - plan_sha: sha256 of its *normalized* analyzed logical plan at
     sf0.001 — expression ids (#123), plan ids, and memory-size hints
     are scrubbed, so the digest moves only when the query's actual
@@ -29,12 +30,14 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SNAPSHOT_PATH = "/root/repo/tests/data/tail_snapshots.json"
+SNAPSHOT_PATH = os.path.join(ROOT, "tests", "data", "tail_snapshots.json")
 SF_DIR = "/root/testdata/sf0.001"
 WINDOW = 50
 
@@ -55,6 +58,15 @@ def _sha(text: str) -> str:
     return hashlib.sha256(text.encode()).hexdigest()
 
 
+def sql_digest(sql: str) -> str:
+    """sha256 of oracle SQL with the package data directory (embedded
+    by the read_csv oracles) replaced by a placeholder, so the digest
+    is the same from any checkout path."""
+    from sarfile_analyzer_ng_spark.queries import _DATA_DIR
+
+    return _sha(sql.replace(_DATA_DIR, "<DATA_DIR>"))
+
+
 def tail_digests(spark) -> dict[str, dict[str, str]]:
     """Digest every registry entry beyond the driver window."""
     from sarfile_analyzer_ng_spark.queries import REGISTRY
@@ -65,7 +77,7 @@ def tail_digests(spark) -> dict[str, dict[str, str]]:
         df = fn(spark, SF_DIR)
         plan = df._jdf.queryExecution().analyzed().toString()
         out[key] = {
-            "sql_sha": _sha(sql) if sql is not None else "rows-only",
+            "sql_sha": sql_digest(sql) if sql is not None else "rows-only",
             "plan_sha": _sha(_normalize_plan(plan)),
         }
     return out
@@ -119,10 +131,10 @@ def main() -> None:
 # tests/test_rotation.py on every run.
 # ---------------------------------------------------------------
 
-CHANGED_PATH = "/root/repo/tools/rotation_changed.json"
+CHANGED_PATH = os.path.join(ROOT, "tools", "rotation_changed.json")
 
 
-def last_green_rounds(repo: str = "/root/repo") -> dict[str, int]:
+def last_green_rounds(repo: str = ROOT) -> dict[str, int]:
     """key -> newest round whose driver CORRECTNESS artifact records
     it fully green (rows + schema + hash)."""
     import glob
