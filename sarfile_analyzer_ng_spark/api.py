@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from . import metadata as MD
 from .operators import stats as ST
 from .operators import timeseries as TS
-from .sources.sar_text import section_wide
+from .sources.sar_text import section_metrics, section_wide
 from .util import rnd
 
 
@@ -83,7 +83,7 @@ def header_details(df: DataFrame, file: str, section: str) -> DataFrame:
     description — api/services.py:219 (descriptions via
     helpers_pl.py:143 get_metric_desc_from_manpage; here a broadcast
     dim built from the same public sysstat man page)."""
-    sect = df.where((F.col("file") == file) & (F.col("section") == section))
+    sect = _scoped(df, file, section)
     stats = sect.groupBy("metric").agg(
         F.countDistinct("device").alias("n_devices"),
         F.count(F.lit(1)).alias("n_values"),
@@ -106,6 +106,18 @@ def _window(df: DataFrame, start, end) -> DataFrame:
     return df
 
 
+def _scoped(df: DataFrame, file: str, section: str, start=None, end=None,
+            device: str | None = None) -> DataFrame:
+    """The long rows of one file's section, time-sliced and optionally
+    one device's — applied before any shuffle so the filters push into
+    the scan."""
+    sect = df.where((F.col("file") == file) & (F.col("section") == section))
+    sect = _window(sect, start, end)
+    if device is not None:
+        sect = sect.where(F.col("device") == device)
+    return sect
+
+
 def device_plan(df: DataFrame, file: str, section: str,
                 show_subheaders_for_all: bool = False) -> DataFrame:
     """Which device frames the reference's analyze flow renders for a
@@ -125,7 +137,7 @@ def device_plan(df: DataFrame, file: str, section: str,
     """
     from pyspark.sql import Window
 
-    sect = df.where((F.col("file") == file) & (F.col("section") == section))
+    sect = _scoped(df, file, section)
     devices = sect.select("device").distinct()
     everything = Window.partitionBy()
     n_all = F.sum(
@@ -148,16 +160,15 @@ def device_plan(df: DataFrame, file: str, section: str,
 
 
 def get_table(df: DataFrame, file: str, section: str, start=None, end=None,
-              device: str | None = None) -> DataFrame:
+              device: str | None = None,
+              metrics: list[str] | None = None) -> DataFrame:
     """Time-filtered wide table for one section/device —
     api/services.py:253 filter_time_range + :310 get_table. Filters are
     applied on the long frame first so they push into the scan before
-    the pivot shuffle."""
-    sect = df.where((F.col("file") == file) & (F.col("section") == section))
-    sect = _window(sect, start, end)
-    if device is not None:
-        sect = sect.where(F.col("device") == device)
-    return section_wide(sect, section)
+    the pivot shuffle. ``metrics`` fixes the pivot vocabulary (see
+    :func:`section_wide`)."""
+    return section_wide(_scoped(df, file, section, start, end, device),
+                        section, metrics)
 
 
 def statistics(df: DataFrame, file: str, section: str,
@@ -167,10 +178,7 @@ def statistics(df: DataFrame, file: str, section: str,
     table (dia_compute_pl.py:73). ``start``/``end`` scope the stats to
     the same window as the data table (the reference computes describe
     AFTER get_date_df, dia_compute_pl.py:63-74)."""
-    sect = df.where((F.col("file") == file) & (F.col("section") == section))
-    sect = _window(sect, start, end)
-    if device is not None:
-        sect = sect.where(F.col("device") == device)
+    sect = _scoped(df, file, section, start, end, device)
     return sect.groupBy("metric").agg(
         F.count("value").alias("cnt"),
         rnd(F.avg("value"), 4).alias("mean"),
@@ -194,9 +202,13 @@ def analyze_section(df: DataFrame, file: str, section: str,
     (step 3). Returns ``[(device, table_df, stats_df), ...]`` — the
     exact frames the reference page renders, everything lazy.
 
-    The device loop collects only the bounded device-plan rows (a
-    handful per section — the same loop the reference runs); no fact
-    data reaches the driver.
+    Building collects two bounded results: the device-plan rows (a
+    handful per section — the same loop the reference runs) and, for a
+    section the headings dim does not know (every sadf section), one
+    metric vocabulary for the whole windowed section
+    (:func:`section_metrics`), shared by every device's table. A
+    device that lacks one of the section's metrics carries it as a
+    null column. No fact data reaches the driver.
     """
     from .operators.timeseries import dedup_keep_first
 
@@ -206,10 +218,11 @@ def analyze_section(df: DataFrame, file: str, section: str,
     # frame — a zero-marker far outside the viewed slice is a bug,
     # not parity worth keeping)
     rst = _window(restarts_of(df, file), start, end)
+    metrics = section_metrics(_scoped(df, file, section, start, end), section)
     out: list[tuple[str | None, DataFrame, DataFrame]] = []
     for row in plan.collect():
         device = row["device"]
-        wide = get_table(df, file, section, start, end, device)
+        wide = get_table(df, file, section, start, end, device, metrics)
         # keep the time axis + metric value columns (the frame is
         # already scoped to one file/device, like the reference's)
         metric_cols = [

@@ -10,6 +10,12 @@ at upload — every later query reads the columnar form). The parquet is
 partitioned by section so per-section queries prune at the directory
 level; at 100 TB the same layout holds with a date partition added.
 
+An upload parses its file once: the parsed frame is persisted for the
+two actions that read it (the rename/stats aggregate and the parquet
+write) and unpersisted before ``upload`` returns or raises. ``load``
+reads with the stored schema (:data:`STORED_SCHEMA`), so opening a
+stored file runs no footer-inference job.
+
 Driver-side ``os.walk`` here touches only filesystem *metadata* (names,
 sizes, mtimes) — never data rows; usage reports come back as
 DataFrames so they compose with the rest of the engine.
@@ -19,6 +25,7 @@ from __future__ import annotations
 
 import lzma
 import os
+import re
 import shutil
 import subprocess
 import tempfile
@@ -27,9 +34,18 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .sources.sadf_json import read_sadf_json, sadf_warnings
-from .sources.sar_text import XZ_MAGIC, read_sar
+from .sources.sar_text import SAR_SCHEMA, XZ_MAGIC, read_sar
+
+# What schema inference gives for a stored upload: the data columns in
+# SAR_SCHEMA order, then the ``section`` partition column. Reading with
+# it skips the per-load parquet footer job.
+STORED_SCHEMA = T.StructType(
+    [f for f in SAR_SCHEMA.fields if f.name != "section"]
+    + [SAR_SCHEMA["section"]]
+)
 
 
 class StoreError(ValueError):
@@ -149,8 +165,6 @@ class SarStore:
         # uses (sources.sar_text / sources.sadf_json) via a staging dir;
         # everything consuming the lazy frame stays inside the staging
         # context.
-        import tempfile
-
         with tempfile.TemporaryDirectory() as tmp:
             (Path(tmp) / filename).write_bytes(content)
             if is_json:
@@ -161,41 +175,46 @@ class SarStore:
                 )
             else:
                 df = read_sar(self.spark, tmp)
+            # both actions below (the rename aggregate and the parquet
+            # write) read the persisted frame, so the parse kernel runs
+            # once; the cache is dropped however the upload ends
+            df.persist()
+            try:
+                # rename to host_YYYY-MM-DD from the parsed content, like
+                # the reference's rename_sar_file — one tiny aggregate
+                # that also carries the upload stats (row/section
+                # counts); the section count is a set size, not
+                # countDistinct, so the aggregate needs one shuffle
+                # instead of two. No collect of data rows.
+                head = df.agg(
+                    F.min_by("host", "ts").alias("host"),
+                    F.date_format(F.min("ts"), "yyyy-MM-dd").alias("day"),
+                    F.count(F.lit(1)).alias("rows"),
+                    F.size(F.collect_set("section")).alias("sections"),
+                ).first()
+                if head["host"] is None or head["day"] is None:
+                    raise StoreError(f"{filename}: no sar samples found")
+                # the hostname comes from FILE CONTENT — sanitize it
+                # before it becomes a path segment, or a crafted OS line
+                # ('Linux 5.x (../../../etc/x) ...') writes outside the
+                # store root; _check_name then re-validates the result
+                safe_host = re.sub(
+                    r"[^A-Za-z0-9._-]", "_", str(head["host"])
+                ).lstrip(".") or "host"
+                name = self._check_name(f"{safe_host}_{head['day']}")
+                d = self._user_dir(user)
+                if (d / f"{name}.parquet").exists():
+                    warnings.append(f"{name}: existing parquet was overwritten")
 
-            # rename to host_YYYY-MM-DD from the parsed content, like
-            # the reference's rename_sar_file — one tiny aggregate that
-            # also carries the upload stats (row/section counts), so
-            # the whole upload is exactly two Spark actions: this agg
-            # and the parquet write. No collect of data rows.
-            head = df.agg(
-                F.min_by("host", "ts").alias("host"),
-                F.date_format(F.min("ts"), "yyyy-MM-dd").alias("day"),
-                F.count(F.lit(1)).alias("rows"),
-                F.countDistinct("section").alias("sections"),
-            ).first()
-            if head["host"] is None or head["day"] is None:
-                raise StoreError(f"{filename}: no sar samples found")
-            # the hostname comes from FILE CONTENT — sanitize it before
-            # it becomes a path segment, or a crafted OS line
-            # ('Linux 5.x (../../../etc/x) ...') writes outside the
-            # store root; _check_name then re-validates the result
-            import re as _re
-
-            safe_host = _re.sub(
-                r"[^A-Za-z0-9._-]", "_", str(head["host"])
-            ).lstrip(".") or "host"
-            name = self._check_name(f"{safe_host}_{head['day']}")
-            d = self._user_dir(user)
-            if (d / f"{name}.parquet").exists():
-                warnings.append(f"{name}: existing parquet was overwritten")
-
-            (d / name).write_bytes(content)
-            # fix the file column to the stored name, partition by
-            # section so per-section reads prune at directory level
-            out = df.withColumn("file", F.lit(name))
-            out.write.mode("overwrite").partitionBy("section").parquet(
-                str(d / f"{name}.parquet")
-            )
+                (d / name).write_bytes(content)
+                # fix the file column to the stored name, partition by
+                # section so per-section reads prune at directory level
+                out = df.withColumn("file", F.lit(name))
+                out.write.mode("overwrite").partitionBy("section").parquet(
+                    str(d / f"{name}.parquet")
+                )
+            finally:
+                df.unpersist()
         return {
             "name": name,
             "rows": head["rows"],
@@ -208,7 +227,7 @@ class SarStore:
         p = self._user_dir(user) / f"{self._check_name(name)}.parquet"
         if not p.exists():
             raise StoreError(f"file {name} not found")
-        return self.spark.read.parquet(str(p))
+        return self.spark.read.schema(STORED_SCHEMA).parquet(str(p))
 
     _LIST_SCHEMA = (
         "user string, name string, raw_bytes long, parquet_bytes long, "

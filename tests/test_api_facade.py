@@ -15,6 +15,7 @@ from sarfile_analyzer_ng_spark.sources.sar_text import read_sar
 pytestmark = pytest.mark.driver  # driver-facing gate (see conftest)
 
 from .test_sar_source import SAR_24H, SAR_AMPM
+from .test_store import jobs_in
 
 
 @pytest.fixture(scope="module")
@@ -394,3 +395,99 @@ def test_cli_forecast_reports_time_to_threshold(spark, tmp_path, capsys,
     # toJSON omits NULL fields: no crossing time is fabricated
     assert free["status"] == "breached"
     assert free.get("days_to_limit") is None
+
+
+def _sadf_disks(spark, tmp_path, disks):
+    """A sadf report whose ``disk`` section holds one entry per
+    ``(device, {metric: value})`` pair at two sample times."""
+    import json as _json
+
+    from sarfile_analyzer_ng_spark.sources.sadf_json import read_sadf_json
+
+    stats = [
+        {"timestamp": {"date": "2024-05-01", "time": t},
+         "disk": [{"disk-device": d, **{m: v + i for m, v in ms.items()}}
+                  for d, ms in disks]}
+        for i, t in enumerate(("10:00:00", "10:10:00"))
+    ]
+    doc = {"sysstat": {"hosts": [{
+        "nodename": "jhost", "release": "9.9", "file-date": "2024-05-01",
+        "statistics": stats,
+    }]}}
+    d = tmp_path / "_".join(dev for dev, _ in disks)
+    d.mkdir()
+    (d / "disk.json").write_text(_json.dumps(doc))
+    df = read_sadf_json(spark, str(d))
+    return df, df.select("file").first()["file"]
+
+
+def _per_device_vocabulary(monkeypatch):
+    """Make every device's get_table derive its own metric vocabulary,
+    as analyze_section did before it shared one per section."""
+    get_table = A.get_table
+    monkeypatch.setattr(
+        A, "get_table",
+        lambda df, file, section, start, end, device, metrics:
+            get_table(df, file, section, start, end, device))
+
+
+def _tables(parts):
+    return [(device, table.columns, table.orderBy("ts", "is_restart").collect())
+            for device, table, _ in parts]
+
+
+def test_analyze_section_fetches_the_vocabulary_once(spark, tmp_path,
+                                                     monkeypatch):
+    """A sadf section is not in the headings dim, so its metric
+    vocabulary is one collect; building for two devices fires no more
+    jobs than building for one."""
+    m = {"tps": 1.0, "rkB/s": 2.0}
+    one, f1 = _sadf_disks(spark, tmp_path, [("sda", m)])
+    two, f2 = _sadf_disks(spark, tmp_path, [("sda", m), ("sdb", m)])
+    parts1, jobs1 = jobs_in(spark, "analyze-one",
+                            lambda: A.analyze_section(one, f1, "disk"))
+    parts2, jobs2 = jobs_in(spark, "analyze-two",
+                            lambda: A.analyze_section(two, f2, "disk"))
+    assert [d for d, _, _ in parts1] == ["sda"]
+    assert [d for d, _, _ in parts2] == ["sda", "sdb"]
+    assert jobs2 == jobs1
+    # the counter sees the per-device vocabulary jobs this replaced
+    _per_device_vocabulary(monkeypatch)
+    _, per_device_jobs = jobs_in(
+        spark, "analyze-two-per-device",
+        lambda: A.analyze_section(two, f2, "disk"))
+    assert per_device_jobs > jobs2
+
+
+@pytest.mark.parametrize("section, kwargs", [
+    ("%user %system %idle", {"show_subheaders_for_all": True}),
+    ("MBfsfree %fsused", {}),
+    ("proc/s cswch/s", {"start": "2024-01-15 00:00:00",
+                        "end": "2024-01-15 23:59:59"}),
+])
+def test_analyze_section_shared_vocabulary_matches_per_device(
+        sar_df, monkeypatch, section, kwargs):
+    f = file_of(sar_df, "sa1")
+    shared = _tables(A.analyze_section(sar_df, f, section, **kwargs))
+    _per_device_vocabulary(monkeypatch)
+    assert shared == _tables(A.analyze_section(sar_df, f, section, **kwargs))
+
+
+def test_analyze_section_device_lacking_a_metric_gets_null_column(
+        spark, tmp_path, monkeypatch):
+    """The one defined difference from per-device vocabularies: every
+    device's table carries the section's whole vocabulary, so a device
+    that never reports a metric gets it as an all-null column (as
+    sar-text sections, whose vocabulary is the header, always did)."""
+    df, f = _sadf_disks(spark, tmp_path, [("sda", {"tps": 1.0, "wkB/s": 3.0}),
+                                          ("sdb", {"tps": 5.0})])
+    shared = {d: (cols, rows) for d, cols, rows in
+              _tables(A.analyze_section(df, f, "disk"))}
+    _per_device_vocabulary(monkeypatch)
+    own = {d: (cols, rows) for d, cols, rows in
+           _tables(A.analyze_section(df, f, "disk"))}
+    assert shared["sda"] == own["sda"]
+    cols, rows = shared["sdb"]
+    assert "wkB/s" in cols and "wkB/s" not in own["sdb"][0]
+    assert [r["wkB/s"] for r in rows] == [None, None]
+    assert [r["tps"] for r in rows] == [r["tps"] for r in own["sdb"][1]]

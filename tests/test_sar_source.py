@@ -48,6 +48,17 @@ def rows_for(content, **kv):
     return rows
 
 
+def test_parsed_columns_come_in_schema_order():
+    """read_sar's kernel builds its pandas frame straight from this
+    dict, without ``columns=``, so the dict must already be in
+    SAR_SCHEMA order."""
+    from sarfile_analyzer_ng_spark.sources.sar_text import (
+        SAR_SCHEMA, parse_sar_columns)
+
+    assert list(parse_sar_columns("f", SAR_24H)) == SAR_SCHEMA.fieldNames()
+    assert list(parse_sar_columns("f", "")) == SAR_SCHEMA.fieldNames()
+
+
 def test_comma_decimal_and_devices():
     rows = rows_for(SAR_24H, metric="%user")
     by_dev = {r["device"]: r["value"] for r in rows}

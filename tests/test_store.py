@@ -4,6 +4,7 @@ delete → cleanup lifecycle (reference api/services.py:94/:159/:379/:524)."""
 from __future__ import annotations
 
 
+import json
 import lzma
 import os
 import time
@@ -232,3 +233,80 @@ def test_upload_sanitizes_hostile_hostname(spark, tmp_path):
     outside = [p for p in tmp_path.rglob("*")
                if p.is_file() and "root" not in p.parts]
     assert outside == []
+
+
+SADF_REPORT = json.dumps({"sysstat": {"hosts": [{
+    "nodename": "jhost", "release": "9.9", "file-date": "2024-05-01",
+    "statistics": [{
+        "timestamp": {"date": "2024-05-01", "time": "10:00:00"},
+        "memory": {"memfree": 10.0},
+        "cpu-load": [{"cpu": "all", "usr": 1.5}],
+    }],
+}]}}).encode()
+
+
+def jobs_in(spark, group, action):
+    """(result, number of Spark jobs ``action`` started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_upload_parses_once_and_frees_its_cache(spark, store, monkeypatch):
+    """Both upload actions (the rename aggregate and the parquet write)
+    read one persisted parse: the parse kernel runs once per file, and
+    the persisted frame is gone when upload returns or raises."""
+    import sarfile_analyzer_ng_spark.store as S
+
+    sc = spark.sparkContext
+    parses = sc.accumulator(0)
+
+    def counted(reader):
+        def read(*args, **kwargs):
+            df = reader(*args, **kwargs)
+
+            def count_batches(batches):
+                for pdf in batches:
+                    parses.add(1)
+                    yield pdf
+            return df.mapInPandas(count_batches, df.schema)
+        return read
+
+    monkeypatch.setattr(S, "read_sar", counted(S.read_sar))
+    monkeypatch.setattr(S, "read_sadf_json", counted(S.read_sadf_json))
+
+    def persisted():
+        return sc._jsc.getPersistentRDDs().size()
+
+    held = persisted()
+    store.upload("alice", "upload.txt", SAR_24H.encode())
+    assert parses.value == 1
+    assert persisted() == held
+    store.upload("alice", "doc.json", SADF_REPORT)
+    assert parses.value == 2
+    assert persisted() == held
+    with pytest.raises(StoreError, match="no sar samples found"):
+        store.upload("alice", "empty.txt",
+                     b"Linux 5.x (h) 2024-01-01\n\nno samples here\n")
+    assert persisted() == held
+
+
+def test_load_reads_the_stored_schema_without_jobs(spark, store):
+    """load() passes the schema inference would find (same names, types
+    and order), so opening a stored file runs no footer job."""
+    uploads = [store.upload("alice", "upload.txt", SAR_24H.encode()),
+               store.upload("alice", "doc.json", SADF_REPORT)]
+    for info in uploads:
+        name = info["name"]
+        df, jobs = jobs_in(spark, f"load-{name}",
+                           lambda: store.load("alice", name))
+        assert jobs == 0
+        inferred = spark.read.parquet(
+            str(store.root / "alice" / f"{name}.parquet")).schema
+        assert df.schema == inferred
+        assert df.count() == info["rows"]
